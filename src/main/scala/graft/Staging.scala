@@ -30,7 +30,7 @@ import java.nio.file.{Files, Path, Paths}
 object Staging {
 
   /** Digest of the source dir's recursive (path, size, mtime) listing
-    * plus a first/last-4 KB content probe of every regular file. */
+    * plus a first/middle/last-4 KB content probe of every regular file. */
   private[graft] def fingerprint(srcDir: String): String = {
     val root = Paths.get(srcDir).toAbsolutePath.normalize
     val md = java.security.MessageDigest.getInstance("MD5")
@@ -71,8 +71,10 @@ object Staging {
               // MIDDLES (parquet data pages between an unchanged header
               // and a rewritten-identical footer); sampling the center
               // 4 KB closes that class without reading whole files —
-              // size+mtime still guard everything else
-              if (size > 12288) probe(size / 2)
+              // size+mtime still guard everything else. Past 8 KB the
+              // head and tail probes leave a gap between them; the middle
+              // probe samples it.
+              if (size > 8192) probe(size / 2)
               if (size > 4096) probe(math.max(4096L, size - 4096))
             } catch {
               case _: java.io.IOException => md.update("!unreadable".getBytes)

@@ -94,10 +94,9 @@ final class Tables(val spark: SparkSession, val dir: String) {
     // to catch. Estimate actual splits as max(files, bytes / 128 MB —
     // the standard row-group target); a corpus of big multi-row-group
     // files or many files takes the no-shuffle branch. The estimate is
-    // MEMOIZED per (dir, name) for the JVM (round-20 advice): the
-    // corpus files are immutable test/staging inputs, and the live
-    // getFileStatus+listStatus on every accessor call was ~40 metadata
-    // round-trips per query construction.
+    // MEMOIZED per corpus file version — (path, size, mtime) — for the
+    // JVM (round-20 advice): the live getFileStatus+listStatus on every
+    // accessor call was ~40 metadata round-trips per query construction.
     // A missing/unreadable corpus file estimates as "already splittable"
     // (round-20 advice): the guard then returns the raw frame, whose own
     // scan raises the canonical AnalysisException — the probe must never
@@ -133,12 +132,17 @@ object Tables {
   def apply(spark: SparkSession, dir: String): Tables = new Tables(spark, dir)
 
   /** JVM-wide memo of [[Tables.computeDense]]'s split estimate, keyed by
-    * the corpus file path. Metadata only (a long per corpus), never row
-    * data — the corpus inputs are immutable for a process lifetime. */
+    * the corpus file's (path, size, mtime): a corpus regenerated in place
+    * re-estimates instead of serving the old file's answer. Metadata
+    * only (a long per corpus), never row data. A path the local
+    * filesystem cannot stat keys on the path alone. */
   private val splitMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def splitEstimate(path: String, est: () => Long): Long =
-    splitMemo.computeIfAbsent(path, _ => java.lang.Long.valueOf(est())).longValue()
+  private[graft] def splitEstimate(path: String, est: () => Long): Long = {
+    val f = new java.io.File(path)
+    splitMemo.computeIfAbsent(s"$path|${f.length}|${f.lastModified}",
+      _ => java.lang.Long.valueOf(est())).longValue()
+  }
 
   /** events.ts across generator versions, normalized to one type.
     *

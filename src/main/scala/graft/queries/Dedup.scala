@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.BlockedPairs
+import graft.operators.BlockedPairs.LshBucketCap
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -141,16 +143,12 @@ object Dedup {
       .withColumn("sz", size(col("hs")))
     val tok = docs.select(col("doc_id"), col("lang"), col("sz"),
       explode(col("hs")).as("sh")).cache()
-    val a = tok.select(col("doc_id").as("doc_a"), col("lang"), col("sh"),
-      col("sz").as("sza"))
-    val b = tok.select(col("doc_id").as("doc_b"), col("lang").as("lang_b"),
-      col("sh").as("sh_b"), col("sz").as("szb"))
-    a.join(b, col("sh") === col("sh_b") && col("lang") === col("lang_b")
-        && col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b", "sza", "szb")
+    BlockedPairs(tok, Seq("sh", "lang"), "doc_id")
+      .groupBy(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        col("sz_a"), col("sz_b"))
       .agg(count(lit(1)).as("n_inter"))
       .select(col("doc_a"), col("doc_b"), col("n_inter").cast("int").as("n_inter"),
-        (col("sza") + col("szb") - col("n_inter")).cast("int").as("n_union"))
+        (col("sz_a") + col("sz_b") - col("n_inter")).cast("int").as("n_union"))
       .filter(col("n_inter") * 2 >= col("n_union"))
       .orderBy("doc_a", "doc_b")
   }
@@ -201,18 +199,15 @@ object Dedup {
       .withColumn("sz", size(col("hs")))
     val tok = docs.select(col("doc_id"), col("sz"),
       explode(col("hs")).as("sh")).cache()
-    val a = tok.select(col("doc_id").as("doc_a"), col("sh"),
-      col("sz").as("sza"))
-    val b = tok.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"),
-      col("sz").as("szb"))
-    a.join(b, col("sh") === col("sh_b") && col("doc_a") < col("doc_b"))
-      .groupBy("doc_a", "doc_b", "sza", "szb")
+    BlockedPairs(tok, Seq("sh"), "doc_id")
+      .groupBy(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+        col("sz_a"), col("sz_b"))
       .agg(count(lit(1)).as("n_inter"))
-      .filter(col("n_inter") * 10 >= least(col("sza"), col("szb")) * 8)
+      .filter(col("n_inter") * 10 >= least(col("sz_a"), col("sz_b")) * 8)
       .select(col("doc_a"), col("doc_b"),
         col("n_inter").cast("int").as("n_inter"),
-        least(col("sza"), col("szb")).cast("int").as("n_small"),
-        when(col("sza") <= col("szb"), col("doc_a")).otherwise(col("doc_b"))
+        least(col("sz_a"), col("sz_b")).cast("int").as("n_small"),
+        when(col("sz_a") <= col("sz_b"), col("doc_a")).otherwise(col("doc_b"))
           .as("contained_id"))
       .orderBy("doc_a", "doc_b")
   }
@@ -277,18 +272,15 @@ object Dedup {
         Tables(spark, dir).documentsDense.filter(col("doc_id") < 5000))
       val tok = selArr.select(col("doc_id"), col("n_fp"),
         explode(col("fps")).as("fp")).cache()
-      val a = tok.select(col("doc_id").as("doc_a"), col("fp"),
-        col("n_fp").as("nfa"))
-      val b = tok.select(col("doc_id").as("doc_b"), col("fp").as("fp_b"),
-        col("n_fp").as("nfb"))
-      a.join(b, col("fp") === col("fp_b") && col("doc_a") < col("doc_b"))
-        .groupBy("doc_a", "doc_b", "nfa", "nfb")
+      BlockedPairs(tok, Seq("fp"), "doc_id")
+        .groupBy(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+          col("n_fp_a"), col("n_fp_b"))
         .agg(count(lit(1)).as("n_shared"))
         .filter(col("n_shared") >= 3)
         .select(col("doc_a"), col("doc_b"),
           col("n_shared").cast("int").as("n_shared"),
-          col("nfa").cast("int").as("n_fp_a"),
-          col("nfb").cast("int").as("n_fp_b"))
+          col("n_fp_a").cast("int").as("n_fp_a"),
+          col("n_fp_b").cast("int").as("n_fp_b"))
         .orderBy("doc_a", "doc_b")
     }
   }
@@ -608,14 +600,9 @@ object Dedup {
       .agg(countDistinct(col("doc_id")).as("nd"), count(lit(1)).as("no"))
       .filter(col("nd") > 1 && col("no") <= cap)
       .select("h")
-    val dupOcc = occ.join(eligible, "h")
-    val pairs = dupOcc
-      .select(col("h"), col("doc_id").as("da"), col("pos").as("pa"))
-      .join(dupOcc.select(col("h"), col("doc_id").as("db"),
-        col("pos").as("pb")), Seq("h"))
-      .filter(col("da") < col("db"))
-      .select(col("da"), col("db"), col("pa"),
-        (col("pa") - col("pb")).as("diag"))
+    val pairs = BlockedPairs(occ.join(eligible, "h"), Seq("h"), "doc_id")
+      .select(col("doc_id_a").as("da"), col("doc_id_b").as("db"),
+        col("pos_a").as("pa"), (col("pos_a") - col("pos_b")).as("diag"))
     val island = Window.partitionBy("da", "db", "diag").orderBy("pa")
     val runs = pairs
       .withColumn("grp", col("pa") - row_number().over(island))
@@ -740,11 +727,10 @@ object Dedup {
       .filter(col("no") > 1 && col("no") <= cap)
       .select("doc_id", "h", "own")
     val docc = occ.join(rep, Seq("doc_id", "h"))
-    val pairs = docc.select(col("doc_id"), col("h"), col("pos").as("pa"))
-      .join(docc.select(col("doc_id"), col("h"), col("pos").as("pb")),
-        Seq("doc_id", "h"))
-      .filter(col("pa") < col("pb"))
-      .select(col("doc_id"), col("pa"), (col("pb") - col("pa")).as("diag"))
+    val pairs = BlockedPairs(docc.select("doc_id", "h", "pos"),
+        Seq("doc_id", "h"), "pos")
+      .select(col("doc_id"), col("pos_a").as("pa"),
+        (col("pos_b") - col("pos_a")).as("diag"))
     val island = Window.partitionBy("doc_id", "diag").orderBy("pa")
     val runs = pairs
       .withColumn("grp", col("pa") - row_number().over(island))
@@ -1078,13 +1064,6 @@ object Dedup {
       .unionByName(planted)
     (base, batch)
   }
-
-  /** Diagnostic accessor for tools.LshDiag's incremental mode — the
-    * perturbed split q_dedup_incremental_lsh measures against. */
-  private[graft] def baseBatchSplitDiag(
-      spark: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) =
-    baseBatchSplit(spark, dir, perturb = true, dense = true)
 
   /** Staged PERSISTED dedup index of the base snapshot — the maintained
     * nightly artifact the incremental queries' docs promise: (a) the
@@ -1434,33 +1413,6 @@ object Dedup {
     }.toString
   }
 
-  /** (band, key, id) rows from (id, s: shingle-hash array) — the
-    * q_dedup_minhash_lsh banding scheme (16 minhashes, 8 bands × 2
-    * rows, key = xxhash64 of the slice), shared by the whole-corpus
-    * LSH query, the persisted index build, and the day-2 batch side
-    * (one algebra — signatures on the two sides must never drift). */
-  /** Dev-diagnostic window into [[bandKeys]] (tools.LshDiag). */
-  private[graft] def bandKeysDiag(withArrays: DataFrame): DataFrame =
-    bandKeys(withArrays, col("doc_id"))
-
-  /** LSH bucket-width cap — the standard production skew guard, sized
-    * from the measured width distribution (tools.LshDiag): a band key
-    * matching more documents than any real near-dup cluster could is
-    * DEGENERATE (it carries no discriminative signal; its pairs are
-    * overwhelmingly verification kills), and emitting its n·(n−1)/2
-    * candidates is exactly the quadratic the banding exists to avoid.
-    * Measured: max bucket width 13 / 86 / 788 / 7,679 at
-    * sf0.1/1/10/100 under copy-scaling, candidate pair mass 2.9 k /
-    * 97 k / 9.3 M / 934 M (×~100 per decade — quadratic); the cap cuts
-    * sf100 to 116 M while touching NOTHING at sf ≤ 1 (86 < 128) and
-    * only 139 degenerate buckets at sf10. Dropped buckets are a
-    * recall trade only for pairs whose EVERY shared band is
-    * degenerate — a true J ≥ ½ pair collides per band with
-    * probability ≥ ¼, so it virtually always holds a narrow bucket
-    * too (DedupSpec's planted-recall pin stays 1.0). Mirrored
-    * verbatim in the DuckDB oracles (HAVING COUNT(*) > cap). */
-  private[graft] val LshBucketCap = 128
-
   /** Pair-count gate for broadcasting candidate structures: below this
     * the pairs (and their array attach) are a safe driver collect;
     * above it the attach joins fall back to shuffle hash joins — same
@@ -1507,6 +1459,11 @@ object Dedup {
   private def bandKeyOf(mh: Column, b: Int): Column =
     xxhash64(element_at(mh, 2 * b + 1), element_at(mh, 2 * b + 2))
 
+  /** (band, key, id) rows from (id, s: shingle-hash array) — the
+    * q_dedup_minhash_lsh banding scheme (16 minhashes, 8 bands × 2
+    * rows, key = xxhash64 of the slice), shared by the whole-corpus
+    * LSH query, the persisted index build, and the day-2 batch side
+    * (one algebra — signatures on the two sides must never drift). */
   private def bandKeys(withArrays: DataFrame, id: Column): DataFrame =
     withArrays
       .select(id.as("id"),
@@ -1573,7 +1530,7 @@ object Dedup {
     * it at the third decade and beyond). */
   private[graft] def incrementalLshPairs(
       spark: org.apache.spark.sql.SparkSession, dir: String,
-      forceBandSequential: Boolean, bandsPerPass: Int = 0): DataFrame = {
+      forceBandSequential: Boolean): DataFrame = {
     val idx = lshIndexPath(spark, dir)
     val baseBands = spark.read.parquet(s"$idx/bands")
       .select(col("id").as("base_doc"), col("band"), col("key"))
@@ -1594,9 +1551,8 @@ object Dedup {
     // practice by the corpus's boilerplate-cluster count — KBs; the
     // sf100 decade run is what made this guard load-bearing (933 M raw
     // candidate pairs from copy-correlated buckets, 70 GB of spill).
-    val wideKeys = baseBands.groupBy("band", "key")
-      .agg(count(lit(1)).as("w")).filter(col("w") > LshBucketCap)
-      .select(col("band"), col("key"))
+    val bandKey = Seq("band", "key")
+    val wideKeys = BlockedPairs.wideKeys(baseBands, bandKey)
     // [[LshBroadcastBandRows]] is now the PASS-STRUCTURE gate: at or
     // under it (every driver sf, and any nightly batch on a cluster
     // with per-executor scratch to match) the judged single-pass shape
@@ -1609,15 +1565,14 @@ object Dedup {
     val bandGate = batchBands.count() <= LshBroadcastBandRows
     if (!bandGate || forceBandSequential)
       return incrementalLshBandSequential(
-        spark, baseArrays, batchArrays, wideKeys, bandsPerPass)
+        spark, baseArrays, batchArrays, wideKeys)
     // candidate id-pairs: batch BANDS broadcast (24-byte rows — MBs for
     // any nightly batch), the 100 TB base index streams; distinct
     // BEFORE the array attach so nothing downstream carries band rows.
     def bandGated(df: DataFrame): DataFrame =
       if (bandGate) broadcast(df) else df
-    val cand = baseBands
-      .join(broadcast(wideKeys), Seq("band", "key"), "left_anti")
-      .join(bandGated(batchBands), Seq("band", "key"))
+    val cand = BlockedPairs.capped(baseBands, bandKey)
+      .join(bandGated(batchBands), bandKey)
       .select(col("batch_doc"), col("base_doc")).distinct()
       .cache() // feeds the size gate AND the attach join; harness-cleared
     // array attach: the CANDIDATE pairs are the broadcast side (bounded
@@ -1719,25 +1674,7 @@ object Dedup {
   private[graft] def incrementalLshBandSequential(
       spark: org.apache.spark.sql.SparkSession,
       baseArrays: DataFrame, batchArrays: DataFrame,
-      wideKeys: DataFrame, bandsPerPass: Int = 0): DataFrame = {
-    // Pass-fusion knob (round-20 experiment): fuse k bands into one
-    // pass — k× the per-pass scratch bound for 8/k base scans +
-    // signature recomputations. 0 = env-or-default. MEASURED: at sf100
-    // (scratch headroom ample) 2-band fusion completes in 63.0 s warm
-    // vs the 100–110 s single-band record (~1.6×, zero failures); at
-    // sf1000v the fused pass ENOSPC'd ~11 min into the cold run — the
-    // doubled per-pass shuffle scratch exceeds the ~55 GB headroom the
-    // single-band structure was sized to fit, which is exactly the
-    // budget this method exists to respect. The shipped default
-    // therefore stays 1 on this box; a node with ≥2× scratch per
-    // executor takes the knob and banks the ~1.6×.
-    val perPass = (if (bandsPerPass > 0) bandsPerPass
-      else sys.env.get("GRAFT_LSH_BANDS_PER_PASS").map(_.toInt).getOrElse(1))
-      match {
-        case v if v == 1 || v == 2 || v == 4 => v
-        case v => throw new IllegalArgumentException(
-          s"bands per pass must be 1, 2, or 4 (got $v)")
-      }
+      wideKeys: DataFrame): DataFrame = {
     // signatures once per side; the batch side caches (it is re-read
     // every pass and is nightly-batch-sized), the base side re-scans
     // the index arrays leg per pass (page-cache-resident)
@@ -1752,49 +1689,18 @@ object Dedup {
     var done = Vector.empty[DataFrame] // per-pass survivors, lineage-cut
     var survCount = 0L
     var antiOn = true
-    for (grp <- (0 until 8).toList.grouped(perPass).toList) {
-      // Single-band pass: the shipped shape, untouched. Fused pass
-      // (k > 1): each side explodes to one row per pass-band — (band,
-      // key) becomes the equi-key, the per-band wide-key anti keys on
-      // both columns, and a FIRST-AGREEING-BAND residual (the
-      // phashDedupPairs rule, integer compares on the pass's earlier
-      // keys carried as array columns) keeps within-pass pair emission
-      // unique, so the verify mass is identical to k single-band
-      // passes. Repartitioning stays on `key` alone — a strict subset
-      // of the join keys, so no extra exchange forms.
-      val (bs, ts, joinKeys, passFilter) = if (grp.size == 1) {
-        val b = grp.head
-        val wb = wide.filter(col("band") === b).select("key")
-        (baseSig
-           .select(col("base_doc"), bandKeyOf(col("mh"), b).as("key"),
-             col("s").as("sb"))
-           .join(broadcast(wb), Seq("key"), "left_anti"),
-         batchSig
-           .select(col("batch_doc"), bandKeyOf(col("mh"), b).as("key"),
-             col("s").as("sa")),
-         Seq("key"), lit(true))
-      } else {
-        val wb = wide.filter(col("band").isin(grp: _*))
-          .select("band", "key")
-        def banded(sig: DataFrame, doc: String, sOut: String,
-            keysOut: String) = sig
-          .select(col(doc), col("s").as(sOut),
-            array(grp.map(b => bandKeyOf(col("mh"), b)): _*).as(keysOut))
-          .select(col(doc), col(sOut), col(keysOut),
-            posexplode(col(keysOut)).as(Seq("bi", "key")))
-          .select(col(doc), col(sOut), col(keysOut),
-            element_at(typedLit(grp), col("bi") + 1).as("band"), col("key"))
-        val firstBand = grp.indices.map { j =>
-          (col("band") === grp(j)) && (0 until j)
-            .map(i => element_at(col("kb"), i + 1)
-              =!= element_at(col("ka"), i + 1))
-            .foldLeft(lit(true))(_ && _)
-        }.reduce(_ || _)
-        (banded(baseSig, "base_doc", "sb", "kb")
-           .join(broadcast(wb), Seq("band", "key"), "left_anti"),
-         banded(batchSig, "batch_doc", "sa", "ka"),
-         Seq("band", "key"), firstBand)
-      }
+    // One band per pass: k bands per pass multiply the per-pass shuffle
+    // scratch by k, and at k = 2 sf1000v overran the ~55 GB headroom
+    // this method exists to respect (ENOSPC ~11 min into the cold run).
+    for (b <- 0 until 8) {
+      val wb = wide.filter(col("band") === b).select("key")
+      val bs = baseSig
+        .select(col("base_doc"), bandKeyOf(col("mh"), b).as("key"),
+          col("s").as("sb"))
+        .join(broadcast(wb), Seq("key"), "left_anti")
+      val ts = batchSig
+        .select(col("batch_doc"), bandKeyOf(col("mh"), b).as("key"),
+          col("s").as("sa"))
       // SHUFFLE_HASH, build = the batch side: sort-merge would SORT
       // both array-bearing sides per pass (the r19 sf1000v maiden run
       // measured 95 GB of transient sort spill across the 8 passes).
@@ -1807,24 +1713,10 @@ object Dedup {
       // REPARTITION_BY_NUM, which AQE does not re-coalesce. Bucket
       // width ≤ LshBucketCap bounds per-key amplification, so no build
       // partition can whale.
-      // sliced build (r19): 8× session partitions puts ONE band's build
-      // at ~25-60 MB. A fused pass carries grp.size bands of build rows
-      // through the same exchange, so the slice count scales with it —
-      // and the repartition MUST cover the full join key set: with
-      // spark.sql.requireAllClusterKeysForCoPartition (default true) a
-      // key-only partitioning is NOT accepted as co-partitioning for
-      // the fused (band, key) join, so EnsureRequirements silently
-      // inserted fresh session-width exchanges and one build became
-      // ~1 GB — the first two sf1000v fusion runs died exactly there
-      // ("not enough memory to build hash map"), while sf100's 10×
-      // smaller builds hid it.
-      val parts =
-        spark.sessionState.conf.numShufflePartitions * 8 * grp.size
-      val jk = joinKeys.map(col)
-      val joined = bs.repartition(parts, jk: _*)
-        .join(ts.repartition(parts, jk: _*).hint("shuffle_hash"),
-          joinKeys)
-        .filter(passFilter)
+      val parts = spark.sessionState.conf.numShufflePartitions * 8
+      val joined = bs.repartition(parts, col("key"))
+        .join(ts.repartition(parts, col("key")).hint("shuffle_hash"),
+          "key")
       val fresh =
         if (antiOn && done.nonEmpty)
           joined.join(
@@ -1934,25 +1826,17 @@ object Dedup {
       val banded0 = bandKeys(docs, col("doc_id"))
         .select(col("id").as("doc_id"), col("band"), col("key"))
       val banded = if (cacheBands) banded0.cache() else banded0
-      // bucket-width guard ([[LshBucketCap]]): degenerate band keys are
-      // dropped before the self-join — the sf100 decade catch (934 M
-      // candidate pairs, ~quadratic under copy-scaling, ran the box out
-      // of shuffle disk). No-op at every driver sf and at sf1 (max
-      // measured width 86 < 128); the wide-key list is ≤ rows/cap by
-      // construction, so the anti-join build side broadcasts at any sf.
-      val wideKeys = banded.groupBy("band", "key")
-        .agg(count(lit(1)).as("w")).filter(col("w") > LshBucketCap)
-        .select(col("band"), col("key"))
-      val usable = banded
-        .join(broadcast(wideKeys), Seq("band", "key"), "left_anti")
-      val l = usable.select(col("band"), col("key"), col("doc_id").as("doc_a"))
-      val r = usable.select(col("band").as("band_b"), col("key").as("key_b"),
-        col("doc_id").as("doc_b"))
-      // dedup candidate id-pairs BEFORE attaching shingle arrays — the
-      // distinct then shuffles 16-byte pairs, not multi-KB payloads
-      val cand = l.join(r, col("band") === col("band_b")
-          && col("key") === col("key_b") && col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b")).distinct()
+      // bucket-width guard (`cap`, [[LshBucketCap]]): degenerate band
+      // keys are dropped before the self-join — the sf100 decade catch
+      // (934 M candidate pairs, ~quadratic under copy-scaling, ran the
+      // box out of shuffle disk). No-op from sf0.001 through sf1 (max
+      // measured width 86 < 128).
+      // Dedup candidate id-pairs BEFORE attaching shingle arrays — the
+      // distinct then shuffles 16-byte pairs, not multi-KB payloads.
+      val cand = BlockedPairs(banded, Seq("band", "key"), "doc_id",
+          cap = true)
+        .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"))
+        .distinct()
       cand
         .join(docs.select(col("doc_id").as("doc_a"), col("s").as("sa")), "doc_a")
         .join(docs.select(col("doc_id").as("doc_b"), col("s").as("sb")), "doc_b")
@@ -2006,15 +1890,11 @@ object Dedup {
               .as("key"))
         }: _*)).as("bk"))
         .select(col("doc_id"), col("sig"), col("bk.blk"), col("bk.key"))
-      val a = blocked.select(col("blk"), col("key"),
-        col("doc_id").as("doc_a"), col("sig").as("sa"))
-      val b = blocked.select(col("blk").as("blk_b"), col("key").as("key_b"),
-        col("doc_id").as("doc_b"), col("sig").as("sb"))
-      a.join(b, col("blk") === col("blk_b") && col("key") === col("key_b")
-          && col("doc_a") < col("doc_b"))
-        .select(col("doc_a"), col("doc_b"), col("sa"), col("sb")).distinct()
+      BlockedPairs(blocked, Seq("blk", "key"), "doc_id")
+        .select(col("doc_id_a").as("doc_a"), col("doc_id_b").as("doc_b"),
+          col("sig_a"), col("sig_b")).distinct()
         .select(col("doc_a"), col("doc_b"),
-          bit_count(col("sa").bitwiseXOR(col("sb"))).cast("long")
+          bit_count(col("sig_a").bitwiseXOR(col("sig_b"))).cast("long")
             .as("hamming"))
         .filter(col("hamming") <= 4)
         .orderBy("doc_a", "doc_b")

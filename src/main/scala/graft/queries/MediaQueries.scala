@@ -1,6 +1,8 @@
 package graft.queries
 
 import graft.multimodal.Media
+import graft.operators.BlockedPairs
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Judged surface for the multimodal plumbing (graft.multimodal.Media).
@@ -517,22 +519,8 @@ object MediaQueries {
       shiftright(col("phash"), 32).bitwiseAND(lit(65535L)),
       shiftright(col("phash"), 48).bitwiseAND(lit(32767L)))
     val keyed = ph.select(col("media_id"), col("phash"), bands.as("ks"))
-    val banded = keyed.select(col("media_id"), col("phash"), col("ks"),
-      posexplode(col("ks")).as(Seq("band", "key")))
-    val l = banded.select(col("band"), col("key"),
-      col("media_id").as("id_a"), col("phash").as("pa"), col("ks").as("ka"))
-    val r = banded.select(col("band").as("band_b"), col("key").as("key_b"),
-      col("media_id").as("id_b"), col("phash").as("pb"), col("ks").as("kb"))
-    val firstBand = (0 until 4).map { j =>
-      (col("band") === j) && (0 until j)
-        .map(i => element_at(col("ka"), i + 1) =!= element_at(col("kb"), i + 1))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    l.join(r, col("band") === col("band_b")
-        && col("key") === col("key_b") && col("id_a") < col("id_b")
-        && firstBand
-        && bit_count(col("pa").bitwiseXOR(col("pb"))) <= 6)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")).distinct()
+    bandPairs(keyed,
+      bit_count(col("phash_a").bitwiseXOR(col("phash_b"))) <= 6)
   }
 
   /** Banded candidate + verify stage over (media_id, feature) — exposed
@@ -545,27 +533,23 @@ object MediaQueries {
       array((0 until 4).map { b =>
         xxhash64(lit(b), q(4 * b), q(4 * b + 1), q(4 * b + 2), q(4 * b + 3))
       }: _*).as("ks"))
-    val banded = keyed.select(col("media_id"), col("feature"), col("ks"),
+    bandPairs(keyed, graft.functions.GraftFunctions.cosineSim(
+      col("feature_a"), col("feature_b")) >= 0.9999)
+  }
+
+  /** Candidate (doc_a, doc_b) media pairs of `keyed` (media_id, `ks`:
+    * 4 band keys, payload columns) that agree on a band, each emitted
+    * from its first agreeing band only and kept when `verify` (over the
+    * `_a`/`_b` payloads) holds. */
+  private def bandPairs(keyed: org.apache.spark.sql.DataFrame,
+      verify: Column): org.apache.spark.sql.DataFrame = {
+    val banded = keyed.select(col("*"),
       posexplode(col("ks")).as(Seq("band", "key")))
-    val l = banded.select(col("band"), col("key"),
-      col("media_id").as("id_a"), col("feature").as("fa"), col("ks").as("ka"))
-    val r = banded.select(col("band").as("band_b"), col("key").as("key_b"),
-      col("media_id").as("id_b"), col("feature").as("fb"),
-      col("ks").as("kb"))
-    // first-agreeing-band rule: bands before this one must DIFFER, so a
-    // pair colliding in k bands surfaces exactly once — pure integer
-    // compares evaluated ahead of the cosine in the conjunction
-    val firstBand = (0 until 4).map { j =>
-      (col("band") === j) && (0 until j)
-        .map(i => element_at(col("ka"), i + 1) =!= element_at(col("kb"), i + 1))
-        .foldLeft(lit(true))(_ && _)
-    }.reduce(_ || _)
-    l.join(r, col("band") === col("band_b")
-        && col("key") === col("key_b") && col("id_a") < col("id_b")
-        && firstBand
-        && graft.functions.GraftFunctions.cosineSim(col("fa"), col("fb"))
-          >= 0.9999)
-      .select(col("id_a").as("doc_a"), col("id_b").as("doc_b")).distinct()
+    val firstBand = BlockedPairs.firstAgreeingBand(col("band"), 4)(i =>
+      element_at(col("ks_a"), i + 1) =!= element_at(col("ks_b"), i + 1))
+    BlockedPairs(banded, Seq("band", "key"), "media_id", firstBand && verify)
+      .select(col("media_id_a").as("doc_a"), col("media_id_b").as("doc_b"))
+      .distinct()
   }
 
   /** JPEG under the oracle (round 13) — the lossy-codec member of the
@@ -907,7 +891,7 @@ object MediaQueries {
         "d0" -> "SELECT pair_id AS doc_id, text FROM pairsrc") ++
       Dedup.lshOracleProgram("d0", Seq("doc_id")) ++ Seq(
         "cwide" -> ("SELECT band, key FROM bands GROUP BY band, key " +
-          s"HAVING COUNT(*) > ${Dedup.LshBucketCap}"),
+          s"HAVING COUNT(*) > ${BlockedPairs.LshBucketCap}"),
         "cbu" -> ("SELECT b.doc_id, b.band, b.key FROM bands b LEFT JOIN " +
           "cwide w ON w.band = b.band AND w.key = b.key WHERE w.band IS NULL"),
         "ccand" -> ("SELECT DISTINCT a.doc_id AS da, b.doc_id AS db " +

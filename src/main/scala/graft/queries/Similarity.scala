@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.BlockedPairs
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -351,56 +352,38 @@ object Similarity {
     // low bit position of band j's lane in the packed bucket (band 0 is
     // most significant — the fold order of graft_lsh_bucket)
     def laneBit(j: Int): Int = (nBands - 1 - j) * bandBits
-    // lane-indicator mask of all bands BEFORE band i: used below to emit
-    // each colliding pair from its FIRST agreeing band only
-    def maskTop(i: Int): Long =
-      (0 until i).map(j => 1L << laneBit(j)).foldLeft(0L)(_ | _)
+    def lane(bucket: Column, j: Int): Column =
+      shiftrightunsigned(bucket, laneBit(j)).bitwiseAND(mask)
     val banded = vecs
       .select(gs ++ Seq(col("vec_id"), col("embedding"),
         graft.functions.GraftFunctions.lshBucket(col("embedding"), nBits)
           .as("bucket")): _*)
       .select(gs ++ Seq(col("vec_id"), col("embedding"), col("bucket"),
         explode(array((0 until nBands).map { i =>
-          struct(lit(i).as("blk"),
-            shiftrightunsigned(col("bucket"), laneBit(i))
-              .bitwiseAND(mask).as("key"),
-            lit(maskTop(i)).as("mtop"))
+          struct(lit(i).as("blk"), lane(col("bucket"), i).as("key"))
         }: _*)).as("bk")): _*)
       .select(gs ++ Seq(col("vec_id"), col("embedding"), col("bucket"),
-        col("bk.blk"), col("bk.key"), col("bk.mtop")): _*)
-    val l = banded.select(gs ++ Seq(col("blk"), col("key"), col("mtop"),
-      col("vec_id").as("id_a"), col("embedding").as("ea"),
-      col("bucket").as("ba")): _*)
-    val r = banded.select(groupCols.map(g => col(g).as(s"${g}_b"))
-      ++ Seq(col("blk").as("blk_b"), col("key").as("key_b"),
-        col("vec_id").as("id_b"), col("embedding").as("eb"),
-        col("bucket").as("bb")): _*)
-    // Each colliding pair is emitted by its FIRST agreeing band only:
-    // fold the XOR of the two packed buckets so every lane's low bit says
-    // "this band differs", then require all lanes BEFORE this band to be
-    // set. Pure integer codegen, evaluated ahead of the cosine in the
-    // conjunction — so a pair sharing k bands pays k-1 two-op integer
-    // rejections and exactly ONE fused-cosine evaluation, the join never
-    // materializes band-duplicate rows, and the pair distinct is a
-    // correctness backstop over near-unique rows. (Deduping ids BEFORE
-    // any filtering shuffled the whole candidate mass as rows — measured
-    // 12 s vs the exact baseline's 7 s at sf0.1/0.4 where 2-bit bands
-    // leave ~96% of pairs as candidates; prefilter-in-join without the
-    // first-band rule still paid ~6 all-pairs of cosine evaluations.)
-    // The prefilter margin sits far above graft_cosine's <1e-12 deviation
-    // from the exact value, so phase 2's decimal threshold stays
-    // authoritative.
-    val x = col("ba").bitwiseXOR(col("bb"))
-    val laneNonzero = (0 until bandBits).map(s => shiftrightunsigned(x, s))
-      .reduce(_ bitwiseOR _)
-    val joinCond = (groupCols.map(g => col(g) === col(s"${g}_b"))
-      ++ Seq(col("blk") === col("blk_b"),
-        col("key") === col("key_b"), col("id_a") < col("id_b"),
-        laneNonzero.bitwiseAND(col("mtop")) === col("mtop"),
-        graft.functions.GraftFunctions.cosineSim(col("ea"), col("eb"))
-          >= threshold - 1e-6)).reduce(_ && _)
-    val pre = l.join(r, joinCond)
-      .select((groupCols :+ "id_a" :+ "id_b").map(col): _*).distinct()
+        col("bk.blk"), col("bk.key")): _*)
+    // Each colliding pair is emitted by its FIRST agreeing band only
+    // (lane compares of the two packed buckets), evaluated ahead of the
+    // cosine in the join condition — so a pair sharing k bands pays k-1
+    // integer rejections and exactly ONE fused-cosine evaluation, the
+    // join never materializes band-duplicate rows, and the pair distinct
+    // is a correctness backstop over near-unique rows. (Deduping ids
+    // BEFORE any filtering shuffled the whole candidate mass as rows —
+    // measured 12 s vs the exact baseline's 7 s at sf0.1/0.4 where 2-bit
+    // bands leave ~96% of pairs as candidates; prefilter-in-join without
+    // the first-band rule still paid ~6 all-pairs of cosine
+    // evaluations.) The prefilter margin sits far above graft_cosine's
+    // <1e-12 deviation from the exact value, so phase 2's decimal
+    // threshold stays authoritative.
+    val firstBand = BlockedPairs.firstAgreeingBand(col("blk"), nBands)(j =>
+      lane(col("bucket_a"), j) =!= lane(col("bucket_b"), j))
+    val pre = BlockedPairs(banded, groupCols ++ Seq("blk", "key"), "vec_id",
+        firstBand && graft.functions.GraftFunctions.cosineSim(
+          col("embedding_a"), col("embedding_b")) >= threshold - 1e-6)
+      .select(gs ++ Seq(col("vec_id_a").as("id_a"),
+        col("vec_id_b").as("id_b")): _*).distinct()
     val n = vecs.select(col("vec_id"), col("embedding"),
       ddot(col("embedding"), col("embedding")).as("nrm"))
     // phase 2: re-join vectors and apply the decimal-exact threshold in a
@@ -1545,14 +1528,11 @@ object Similarity {
     // still run over the full corpus at every sf; at 100 TB the pair
     // stage swaps in the banded generator per cluster (scaladoc above).
     val pv = a2.filter(col("vec_id") < 2048)
-    val l = pv.select(col("cluster"), col("vec_id").as("id_a"),
-      col("embedding").as("ea"))
-    val r = pv.select(col("cluster").as("cluster_b"), col("vec_id").as("id_b"),
-      col("embedding").as("eb"))
-    val pairs = l.join(r, col("cluster") === col("cluster_b")
-        && col("id_a") < col("id_b"))
-      .select(col("cluster"), col("id_a"), col("id_b"),
-        cosineSim(col("ea"), col("eb")).as("cos"))
+      .select(col("cluster"), col("vec_id"), col("embedding"))
+    val pairs = BlockedPairs(pv, Seq("cluster"), "vec_id")
+      .select(col("cluster"), col("vec_id_a").as("id_a"),
+        col("vec_id_b").as("id_b"),
+        cosineSim(col("embedding_a"), col("embedding_b")).as("cos"))
       .filter(col("cos") >= tau)
     // min-id witness per pruned vector, one window pass over the (small)
     // qualifying pair set
