@@ -936,10 +936,10 @@ object Dedup {
     *
     * Scale design (100 TB base, GB-scale batch): the base side is never
     * shuffled and never joined as a build side —
-    *   1. a distributed BloomFilterAggregate over base fingerprints
-    *      (scan + partial/final agg; only the KB-scale sketch crosses
-    *      the driver — at scale this sketch is maintained incrementally
-    *      night-over-night instead of rebuilt);
+    *   1. a distributed BloomFilterAggregate over base fingerprints,
+    *      sized from their count (scan + partial/final agg; only the
+    *      sketch crosses the driver — at scale this sketch is
+    *      maintained incrementally night-over-night instead of rebuilt);
     *   2. batch rows probe the bloom PRE-shuffle (codegen
     *      might_contain) — false-positive candidates only, typically
     *      ~the true-dup mass;
@@ -1016,9 +1016,9 @@ object Dedup {
     val baseFp = base.select(fp.as("fp"))
     // 1. distributed bloom build over base fingerprints — the one base
     //    pass that at scale becomes an incrementally-maintained
-    //    artifact. Empty base → null sketch → null probe → the filter
+    //    artifact. Empty base → null sketch → FALSE probe → the filter
     //    keeps nothing: zero candidates, every batch fp genuinely new.
-    val bfBytes = graft.functions.BloomProbe.sketch(baseFp, col("fp"), 300000L)
+    val bfBytes = graft.functions.BloomProbe.sketch(baseFp, col("fp"))
     val probe = graft.functions.BloomProbe.mightContain(bfBytes, col("fp"))
     // 2. pre-shuffle candidate cut on the batch
     val batchFp = batch.select(col("doc_id"), col("source"), fp.as("fp"))
@@ -1071,8 +1071,9 @@ object Dedup {
     * (fp-only — ~16 bytes/row regardless of document size, so at 100 TB
     * of text the index is GBs, rebuilt or merged nightly, never the
     * corpus), range-laid by fp so a fingerprint probe touches few
-    * files; (b) the KB-scale bloom sketch of those fingerprints as a
-    * flat binary file — the scan-side filter loads it without touching
+    * files; (b) the bloom sketch of those fingerprints, sized from their
+    * count, as a flat binary file beside the count it was sized for
+    * (`sketch.items`) — the scan-side filter loads it without touching
     * the fp table at all. Write-once per sf dir, keyed by its own
     * marker AFTER both parts land (`_SUCCESS` alone would race the
     * sketch write — pattern: SourceQueries.zorderedOrdersPath). */
@@ -1080,21 +1081,31 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     // content-fingerprinted (graft.Staging): a regenerated base corpus
     // gets a fresh index path, never a stale fp/bloom pair
-    // version = builder-algebra identity (fingerprint fn + bloom sizing);
+    // version = builder-algebra identity (fingerprint fn + bloom sizing;
+    // v2: sketch sized from the fp count, recorded in sketch.items);
     // buildOnce publishes atomically (round-12 advice)
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_base_index", dir, version = 1),
+        graft.Staging.path("graft_dedup_base_index", dir, version = 2),
         "_INDEX_READY") { tmp =>
       val (base, _) = baseBatchSplit(spark, dir, perturb = false)
       val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
       val baseFp = base.select(fp.as("fp")).distinct()
       baseFp.repartitionByRange(16, col("fp")).sortWithinPartitions("fp")
         .write.mode("overwrite").parquet(tmp.resolve("fps").toString)
-      val sketch = graft.functions.BloomProbe.sketch(
-        spark.read.parquet(tmp.resolve("fps").toString), col("fp"), 300000L)
-      java.nio.file.Files.write(tmp.resolve("sketch.bin"),
-        if (sketch == null) Array.emptyByteArray else sketch)
+      val (sketch, items) = graft.functions.BloomProbe.sizedSketch(
+        spark.read.parquet(tmp.resolve("fps").toString), col("fp"))
+      writeSketch(tmp, sketch, items)
     }.toString
+  }
+
+  /** A staged sketch: `sketch.bin` (empty file = empty-set sentinel)
+    * plus `sketch.items`, the item count it was sized for — the
+    * geometry a later delta sketch must be built with to merge. */
+  private def writeSketch(dir: java.nio.file.Path, sketch: Array[Byte],
+      items: Long): Unit = {
+    java.nio.file.Files.write(dir.resolve("sketch.bin"),
+      if (sketch == null) Array.emptyByteArray else sketch)
+    java.nio.file.Files.writeString(dir.resolve("sketch.items"), items.toString)
   }
 
   /** INCREMENTAL dedup READING the persisted index — day 2 of
@@ -1156,10 +1167,9 @@ object Dedup {
   private[graft] def indexedAdmission(indexFp: DataFrame,
       sketchBytes: Array[Byte], batch: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sketch = if (sketchBytes.isEmpty) null else sketchBytes
     val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
     val batchFp = batch.select(col("doc_id"), col("source"), fp.as("fp"))
-    val probe = graft.functions.BloomProbe.mightContain(sketch, col("fp"))
+    val probe = graft.functions.BloomProbe.mightContain(sketchBytes, col("fp"))
     val candidates = batchFp.filter(probe).select("fp").distinct()
     val confirmed = indexFp
       .join(broadcast(candidates), Seq("fp"), "left_semi").distinct()
@@ -1198,28 +1208,31 @@ object Dedup {
     * verdict asked to see judged: a new delta fp segment beside the
     * base index (range-laid by fp, preserving the probe layout), plus
     * the bloom union ([[graft.functions.BloomProbe.merge]] — bitwise OR
-    * of compatible sketches, KB-scale). The base fps/sketch files are
-    * untouched: at 100 TB the merge writes only batch-derived bytes. */
+    * of sketches built with the base's recorded geometry). The base
+    * fps/sketch files are untouched: at 100 TB the merge writes only
+    * batch-derived bytes. */
   private[graft] def dedupMergedIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_merged_index", dir, version = 1),
+        graft.Staging.path("graft_dedup_merged_index", dir, version = 2),
         "_INDEX_READY") { tmp =>
-      val idx = dedupIndexPath(spark, dir)
-      val baseSketch = java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(idx, "sketch.bin"))
+      val idx = java.nio.file.Paths.get(dedupIndexPath(spark, dir))
+      val baseSketch = java.nio.file.Files.readAllBytes(idx.resolve("sketch.bin"))
+      val baseItems =
+        java.nio.file.Files.readString(idx.resolve("sketch.items")).trim.toLong
       dedupMergeDelta(spark, dir)
         .repartitionByRange(4, col("fp")).sortWithinPartitions("fp")
         .write.mode("overwrite").parquet(tmp.resolve("fps_delta").toString)
-      // delta sketch sized EXACTLY like the base sketch (300 k): bloom
-      // union requires identical geometry
-      val deltaSketch = graft.functions.BloomProbe.sketch(
-        spark.read.parquet(tmp.resolve("fps_delta").toString),
-        col("fp"), 300000L)
-      val merged = graft.functions.BloomProbe.merge(
-        if (baseSketch.isEmpty) null else baseSketch, deltaSketch)
-      java.nio.file.Files.write(tmp.resolve("sketch.bin"),
-        if (merged == null) Array.emptyByteArray else merged)
+      // bloom union requires identical geometry: the delta sketch is
+      // built with the base sketch's recorded size (an empty base has
+      // no geometry to match — the delta sizes itself)
+      val delta = spark.read.parquet(tmp.resolve("fps_delta").toString)
+      val (deltaSketch, items) =
+        if (baseItems > 0) (graft.functions.BloomProbe.sketchSizedFor(
+          delta, col("fp"), baseItems), baseItems)
+        else graft.functions.BloomProbe.sizedSketch(delta, col("fp"))
+      writeSketch(tmp, graft.functions.BloomProbe.merge(baseSketch, deltaSketch),
+        items)
     }.toString
 
   /** Judged nightly index merge (round 13): day 1 indexes the base

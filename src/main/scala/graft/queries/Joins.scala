@@ -437,14 +437,17 @@ object Joins {
 
   /** Bloom-prefiltered fact-fact join — the manual runtime-filter
     * pattern. A selective predicate keeps ~20 % of orders; a Bloom
-    * filter of the surviving keys (a KB-scale sketch, the one thing here
-    * that legitimately passes through the driver) is applied to lineitem
-    * BEFORE the shuffle join, so ~80 % of the fact side drops at the
-    * scan instead of crossing the exchange. Build and probe are the same
-    * expression pair Spark's own `InjectRuntimeFilter` emits —
-    * `BloomFilterAggregate`/`BloomFilterMightContain` over
-    * `xxhash64(key)` — so the probe stays inside whole-stage codegen
-    * (no ScalaUDF boundary per fact row; PlanSpec pins this). False
+    * filter of the surviving keys (the one thing here that legitimately
+    * passes through the driver) is applied to lineitem BEFORE the
+    * shuffle join, so ~80 % of the fact side drops at the scan instead
+    * of crossing the exchange. Build and probe are the pair Spark's own
+    * `InjectRuntimeFilter` emits — `BloomFilterAggregate` and a
+    * `might_contain` over `xxhash64(key)` — with the sketch sized from a
+    * distributed count of the surviving keys (Spark's bits-per-item
+    * rule) and carried into the probe by reference, so the plan shows
+    * its geometry, not its bytes ([[graft.functions.BloomProbe]]). The
+    * probe stays inside whole-stage codegen (no ScalaUDF boundary per
+    * fact row; PlanSpec pins this). False
     * positives only cost bytes, never correctness — the real join still
     * verifies every pair — which is why the oracle is simply the plain
     * join SQL. (AQE's automatic runtime bloom does this when stats
@@ -462,10 +465,11 @@ object Joins {
     val urgent = t.orders
       .filter(col("o_orderpriority").isin("1-URGENT", "2-HIGH"))
       .select(col("o_orderkey"), col("o_orderpriority"))
-    // distributed partial+final build of the sketch; only the KB-scale
-    // serialized filter crosses the driver
-    val bfBytes =
-      graft.functions.BloomProbe.sketch(urgent, col("o_orderkey"), 300000L)
+    // distributed partial+final build of the sketch, sized from a
+    // distributed count of `urgent` (Spark's own bits-per-item rule);
+    // only the serialized filter crosses the driver, and the probe
+    // carries it by reference — the plan shows its geometry, not its bytes
+    val bfBytes = graft.functions.BloomProbe.sketch(urgent, col("o_orderkey"))
     val probe =
       graft.functions.BloomProbe.mightContain(bfBytes, col("l_orderkey"))
     t.lineitem

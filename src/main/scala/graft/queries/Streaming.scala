@@ -499,8 +499,7 @@ object Streaming {
     val baseKeys = graft.Tables(spark, dir).events
       .filter(Scramble(col("event_id")) % 4 =!= 0)
       .select("event_id").distinct()
-    val bfBytes =
-      graft.functions.BloomProbe.sketch(baseKeys, col("event_id"), 300000L)
+    val bfBytes = graft.functions.BloomProbe.sketch(baseKeys, col("event_id"))
     val probe =
       graft.functions.BloomProbe.mightContain(bfBytes, col("event_id"))
     val src = EventsStream.read(spark, dir)

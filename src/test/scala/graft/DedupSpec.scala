@@ -483,8 +483,8 @@ class DedupSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, not}
     val a = spark.range(100).toDF("k")
     val b = spark.range(1000, 1100).toDF("k")
-    val sa = BloomProbe.sketch(a, col("k"), 300000L)
-    val sb = BloomProbe.sketch(b, col("k"), 300000L)
+    val sa = BloomProbe.sketch(a, col("k"))
+    val sb = BloomProbe.sketch(b, col("k"))
     val m = BloomProbe.merge(sa, sb)
     // no false negatives across either input — the bloom-union law
     assert(a.unionByName(b)
@@ -517,6 +517,12 @@ class DedupSpec extends SparkSpec {
       java.nio.file.Paths.get(baseIdx, "sketch.bin"))
     val mergedSketch = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(mergedIdx, "sketch.bin"))
+    // the delta sketch was built with the base sketch's recorded
+    // geometry, so the union kept the base's bit width
+    val bits = (b: Array[Byte]) =>
+      org.apache.spark.util.sketch.BloomFilter.readFrom(b).bitSize()
+    assert(bits(mergedSketch) == bits(baseSketch),
+      s"merged sketch ${bits(mergedSketch)} bits, base ${bits(baseSketch)}")
     val baseFps = spark.read.parquet(s"$baseIdx/fps")
     val mergedFps = baseFps.unionByName(
       spark.read.parquet(s"$mergedIdx/fps_delta"))

@@ -737,4 +737,66 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("max(struct(cos"),
       s"k-way explode/max-struct assignment shape reappeared:\n${p.take(3000)}")
   }
+
+  test("bloom dedup plans carry the sketch by reference: formatted explain < 100 KB, no hex run") {
+    // a sketch inlined as a BinaryType literal is hex-formatted into
+    // every plan string (explain, each AQE re-plan in the status store):
+    // 0.5-1 MB per probe at a fixed 300k-item sizing
+    for (name <- Seq("q_dedup_incremental", "q_dedup_incremental_indexed",
+        "q_dedup_index_merge")) {
+      val q = Registry.all.find(_.name == name).get
+      val p = q.run(spark, sf).queryExecution
+        .explainString(org.apache.spark.sql.execution.FormattedMode)
+      assert(p.contains("might_contain"), s"$name: bloom probe absent")
+      assert(p.length < 100 * 1024, s"$name: formatted explain is ${p.length} chars")
+      val hex = "[0-9A-Fa-f]{2048,}".r.findFirstIn(p)
+      assert(hex.isEmpty,
+        s"$name: ${hex.map(_.length).getOrElse(0)}-char hex run in the plan")
+    }
+  }
+
+  test("documents guard scope: only the kernel-dense scans repartition documents") {
+    // Tables.documentsDense hash-spreads the one-row-group corpus only
+    // when the session's parallelism dwarfs its splits; at the shared
+    // local[4] session it never fires, so the pin builds each plan at
+    // the 32-core bench axis's width, where it must
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{Exchange, REPARTITION_BY_NUM, ShuffleExchangeExec}
+    // every node, through cached relations (the pair queries cache their
+    // guarded shingle frame) and adaptive wrappers
+    def inner(p: SparkPlan): Seq[SparkPlan] = p match {
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case o => o.children
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: inner(p).flatMap(nodes)
+    def scansDocuments(p: SparkPlan): Boolean = p match {
+      case s: FileSourceScanExec =>
+        s.relation.location.rootPaths.exists(_.getName == "documents.parquet")
+      case _: Exchange => false
+      case o => inner(o).exists(scansDocuments)
+    }
+    def repartitionsDocuments(name: String): Boolean = {
+      val q = Registry.all.find(_.name == name).get
+      val p = org.apache.spark.GraftParallelismBridge
+        .withDefaultParallelism(spark.sparkContext, 32) {
+          q.run(spark, sf).queryExecution.sparkPlan
+        }
+      nodes(p).exists {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+          scansDocuments(e.child)
+        case _ => false
+      }
+    }
+    for (name <- Seq("q_dedup_exact", "q_text_tokens", "q_dedup_incremental"))
+      assert(!repartitionsDocuments(name),
+        s"$name: light consumer grew the documents repartition guard")
+    for (name <- Seq("q_text_lm_score", "q_dedup_ngram_jaccard",
+        "q_dedup_containment", "q_dedup_winnow", "q_text_repetition"))
+      assert(repartitionsDocuments(name),
+        s"$name: kernel-dense consumer lost the documents repartition guard")
+  }
 }
