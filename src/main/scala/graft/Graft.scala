@@ -31,6 +31,27 @@ object Graft {
       .config("spark.sql.codegen.cache.maxEntries", "10000")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
+  /** Run `body` with session confs `settings` in force, then put each key
+    * back as it was found: set to its old value, or unset if it had none.
+    * The one place engine code changes session conf after construction
+    * (fixpoint widths, streaming state width, state-store provider).
+    *
+    * SINGLE-THREADED ASSUMPTION: the session is shared, so a query or
+    * stream PLANNED on it by another thread inside the window picks up
+    * the scoped values, and overlapping scopes restore stale values. All
+    * callers in this repo run one query at a time (Verify/Bench). A fix
+    * for concurrent use of one session changes this helper only; moving
+    * a stream into a child session does not work (ROADMAP direction 4). */
+  def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+    val explicit = spark.conf.getAll
+    val prev = settings.map { case (k, _) => k -> explicit.get(k) }
+    settings.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Attach graft functions to an existing session (e.g. one owned by a
     * host application that can't pass extensions at build time). Must
     * register the same set as GraftExtensions — RegistrySmokeSpec pins

@@ -85,18 +85,56 @@ object Staging {
     md.digest().take(8).map(b => f"$b%02x").mkString
   }
 
-  /** /tmp staging path for artifact `prefix` derived from `srcDir`.
-    *
-    * `version` is the PRODUCING CODE's identity (round-12 advice): the
-    * content fingerprint covers the data, but a change to the builder's
-    * algebra (transcode rotation, centroid arithmetic, band layout)
-    * would otherwise silently reuse the stale artifact under the same
-    * path and surface as a baffling oracle hash mismatch instead of a
-    * rebuild. Builders bump their version constant when their algebra
-    * changes; artifact identity = data fingerprint × code version. */
-  def path(prefix: String, srcDir: String, version: Int = 1): Path =
-    Paths.get(sys.props("java.io.tmpdir"),
-      s"${prefix}_v${version}_${fingerprint(srcDir)}")
+  /** Digest of the engine's compiled `graft/**/*.class` files, read from
+    * `root` (a class directory or a jar) in name order: the PRODUCING
+    * CODE's identity. The data fingerprint covers the inputs, but a change
+    * to a builder's algebra (transcode rotation, centroid arithmetic, band
+    * layout) would otherwise reuse the stale artifact under the same path
+    * and surface as an oracle hash mismatch instead of a rebuild. Throws
+    * when no class can be read: a constant stand-in would make every
+    * build share one identity again. */
+  private[graft] def codeDigest(root: Path): String = {
+    import scala.jdk.CollectionConverters._
+    val jar =
+      if (Files.isDirectory(root)) None
+      else Some(java.nio.file.FileSystems.newFileSystem(root))
+    try {
+      val base = jar.fold(root)(_.getPath("/"))
+      val walk = Files.walk(base.resolve("graft"))
+      val classes = try walk.iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".class"))
+        .map(f => base.relativize(f).iterator().asScala.mkString("/") -> f)
+        .toArray.sortBy(_._1)
+      finally walk.close()
+      if (classes.isEmpty)
+        throw new IllegalStateException(s"no graft classes under $root")
+      val md = java.security.MessageDigest.getInstance("MD5")
+      classes.foreach { case (name, f) =>
+        val bytes = Files.readAllBytes(f)
+        md.update(s"$name:${bytes.length}|".getBytes("UTF-8"))
+        md.update(bytes)
+      }
+      md.digest().take(8).map(b => f"$b%02x").mkString
+    } finally jar.foreach(_.close())
+  }
+
+  /** [[codeDigest]] of the classes this JVM runs, computed once. */
+  private[graft] lazy val code: String = codeDigest(Paths.get(
+    getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
+
+  private[graft] def pathFor(code: String, prefix: String, srcDir: String): Path =
+    Paths.get(sys.props("java.io.tmpdir"), s"${prefix}_${code}_${fingerprint(srcDir)}")
+
+  /** /tmp staging path for artifact `prefix` derived from `srcDir`:
+    * artifact identity = engine [[code]] digest × data fingerprint. */
+  def path(prefix: String, srcDir: String): Path = pathFor(code, prefix, srcDir)
+
+  /** The signature before the code digest replaced the hand-kept version
+    * number; the number is ignored. Kept only because the `perfbench/`
+    * harness still resolves `__STAGED:<prefix>:vN__` through it. */
+  @deprecated("the code digest is the artifact's code identity", "0.1.0")
+  def path(prefix: String, srcDir: String, version: Int): Path =
+    pathFor(code, prefix, srcDir)
 
   /** Write-once build with ATOMIC publication (round-12 advice: the
     * bare check-then-build let two JVMs sharing /tmp — a test suite and
@@ -129,13 +167,16 @@ object Staging {
     out
   }
 
-  private def deleteRecursively(p: Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val walk = Files.walk(p)
-    try walk.iterator().asScala.toArray.sortBy(-_.getNameCount)
-      .foreach(f => try Files.deleteIfExists(f) catch {
-        case _: java.io.IOException => ()
-      })
-    finally walk.close()
-  }
+  /** Best-effort recursive delete with the walk's directory handles
+    * closed (long-lived sessions call this once per query). */
+  private[graft] def deleteRecursively(p: Path): Unit =
+    try {
+      import scala.jdk.CollectionConverters._
+      val walk = Files.walk(p)
+      try walk.iterator().asScala.toArray.sortBy(-_.getNameCount)
+        .foreach(f => try Files.deleteIfExists(f) catch {
+          case _: java.io.IOException => ()
+        })
+      finally walk.close()
+    } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
 }

@@ -44,16 +44,16 @@ object Verify {
       case c => c.toString
     } + "\""
     // staged-artifact references: an oracle may name a write-once staged
-    // table (the JPEG decode-once rasters) via __STAGED:<prefix>:vN__ —
-    // the path is content-fingerprinted per sf dir, so it can only be
-    // resolved HERE, where the sf dir is known. The artifact itself was
-    // built by the query's own run above, so the dumped SQL always
-    // points at an existing parquet tree.
-    val stagedRe = "__STAGED:([A-Za-z0-9_]+):v([0-9]+)__".r
+    // table (the JPEG decode-once rasters) via __STAGED:<prefix>__ — the
+    // path is keyed on the sf dir's content fingerprint (and the engine
+    // code digest), so it can only be resolved HERE, where the sf dir is
+    // known. The artifact itself was built by the query's own run above,
+    // so the dumped SQL always points at an existing parquet tree.
+    val stagedRe = "__STAGED:([A-Za-z0-9_]+)__".r
     def resolve(sql: String): String =
       stagedRe.replaceAllIn(sql, m =>
         java.util.regex.Matcher.quoteReplacement(
-          Staging.path(m.group(1), sfDir, m.group(2).toInt).toString))
+          Staging.path(m.group(1), sfDir).toString))
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(resolve(v))}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -509,12 +509,10 @@ object Media {
     * operator under test), not the synthetic corpus's re-encode. */
   def codecMediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    // version = transcode-rotation identity (bump when the rotation or
-    // encode formats change — round-12 advice: the content fingerprint
-    // covers the data, not the producing algebra); buildOnce publishes
-    // atomically so concurrent JVMs can't interleave overwrite writes
+    // buildOnce publishes atomically so concurrent JVMs can't
+    // interleave overwrite writes
     val out = graft.Staging.buildOnce(
-        graft.Staging.path("graft_codec_media", dir, version = 1),
+        graft.Staging.path("graft_codec_media", dir),
         "_SUCCESS") { tmp =>
       mediaTable(spark, dir).mapPartitions { it =>
         it.map { m =>
@@ -771,7 +769,7 @@ object Media {
   def jpegMediaPath(spark: SparkSession, dir: String): String = {
     import spark.implicits._
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_jpeg_media", dir, version = 1),
+        graft.Staging.path("graft_jpeg_media", dir),
         "_JPEG_READY") { tmp =>
       mediaTable(spark, dir).filter(_.kind == "image")
         .mapPartitions { it =>

@@ -45,6 +45,7 @@ import org.apache.spark.sql.functions._
   * pairs are distinct after aggregation.
   */
 object BpeMerges {
+  import ConnectedComponents.{fixpointWidth, unpersistCheckpoint}
 
   val Sep = "\u0001"
 
@@ -82,17 +83,11 @@ object BpeMerges {
     // The vocabulary table is ~10^6 rows even at a 100 TB corpus; like
     // the CC fixpoint, each round's plan restarts from a checkpoint RDD
     // so AQE can't right-size the per-round shuffle — pin it to the
-    // measured vocabulary volume (restored after the loop; same
-    // single-threaded-session assumption as ConnectedComponents).
-    val key = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(key)
-    val sessionParts = scala.util.Try(prevParts.toLong).getOrElse(32L)
+    // measured vocabulary volume for the loop.
     var state = words.select(col("cnt").cast("long").as("cnt"), col("s"))
       .localCheckpoint(eager = false)
-    val parts = math.max(1L, math.min(sessionParts,
-      state.count() / 2000000L + 1L)) // materializes the init checkpoint
-    spark.conf.set(key, parts.toString)
-    try {
+    val parts = fixpointWidth(spark, state.count()) // materializes the init checkpoint
+    graft.Graft.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString) {
       val merges = Seq.newBuilder[(Int, String, String, String, Long)]
       // the PREVIOUS round's state: its checkpoint blocks feed the
       // current state's lazy materialization, so (as in the CC fixpoint)
@@ -151,21 +146,11 @@ object BpeMerges {
       merges.result()
         .toDF("rank", "left_sym", "right_sym", "merged", "n")
         .orderBy("rank")
-    } finally spark.conf.set(key, prevParts)
+    }
   }
 
   /** Per-round wall times (ms) of the last learn() call — diagnostics
     * for the fixed-cost-per-round amortization audit in SCALE.md (the
     * CC lastRounds pattern; not part of any judged surface). */
   @volatile private[graft] var lastRoundMillis: Seq[Long] = Nil
-
-  /** Drop the storage blocks behind a lazy localCheckpoint (same
-    * mechanics as ConnectedComponents.unpersistCheckpoint — the blocks
-    * live under the LogicalRDD leaf, out of clearCache()'s reach). */
-  private def unpersistCheckpoint(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.collectLeaves().foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    } catch { case scala.util.control.NonFatal(_) => () }
 }

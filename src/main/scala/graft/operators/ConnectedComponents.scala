@@ -47,18 +47,10 @@ object ConnectedComponents {
     // boundaries start each round's plan from a raw RDD scan, so every
     // round otherwise pays the session default (32 tasks per shuffle) to
     // move a few thousand rows — measured ~5 s of pure task-scheduling
-    // overhead per fixpoint on the judged dedup graphs. One partition per
-    // ~2M edges, capped at the session default so a 100 TB edge set keeps
-    // the cluster-configured width. Restored after the loop (same
-    // single-threaded-session assumption as EventsStream.scopedStateConf).
+    // overhead per fixpoint on the judged dedup graphs. Scoped to the
+    // loop by Graft.withConf.
     val spark = pairs.sparkSession
-    val key = "spark.sql.shuffle.partitions"
-    val prevParts = spark.conf.get(key)
-    // host sessions may carry a non-numeric value here (e.g. "auto" on
-    // managed platforms) — fall back to a sane width instead of throwing
-    val sessionParts = scala.util.Try(prevParts.toLong).getOrElse(32L)
-    val parts = math.max(1L, math.min(sessionParts,
-      edges.count() / 2000000L + 1L))
+    val parts = fixpointWidth(spark, edges.count())
     // Coalesce the loop-invariant edge checkpoint to the fixpoint width
     // (round 21, the pagerank loop-invariant discipline): the union
     // inherits the upstream candidate pipeline's partitioning (64 blocks
@@ -75,8 +67,20 @@ object ConnectedComponents {
         unpersistCheckpoint(edges)
         c
       } else edges
-    spark.conf.set(key, parts.toString)
-    try minLabelLoop(edgesSized) finally spark.conf.set(key, prevParts)
+    graft.Graft.withConf(spark, "spark.sql.shuffle.partitions" -> parts.toString)(
+      minLabelLoop(edgesSized))
+  }
+
+  /** Shuffle width for a fixpoint loop over `rows` checkpointed rows: one
+    * partition per ~2M rows, capped at the session default so a 100 TB
+    * input keeps the cluster-configured width. Host sessions may carry a
+    * non-numeric default (e.g. "auto" on managed platforms); that caps
+    * at 32 instead of throwing. */
+  private[graft] def fixpointWidth(spark: org.apache.spark.sql.SparkSession,
+      rows: Long): Long = {
+    val session = scala.util.Try(
+      spark.conf.get("spark.sql.shuffle.partitions").toLong).getOrElse(32L)
+    math.max(1L, math.min(session, rows / 2000000L + 1L))
   }
 
   private def minLabelLoop(edges: DataFrame): DataFrame = {

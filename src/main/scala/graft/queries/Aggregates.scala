@@ -317,7 +317,7 @@ object Aggregates {
     // fresh fingerprint → restage, so a rows-only query can never serve
     // sketches of a dataset that no longer exists
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_sketch_orders_month", dir, version = 1),
+        graft.Staging.path("graft_sketch_orders_month", dir),
         "_SUCCESS") { tmp =>
       Tables(spark, dir).orders
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("o_month"))

@@ -1080,12 +1080,10 @@ object Dedup {
   private[graft] def dedupIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     // content-fingerprinted (graft.Staging): a regenerated base corpus
-    // gets a fresh index path, never a stale fp/bloom pair
-    // version = builder-algebra identity (fingerprint fn + bloom sizing;
-    // v2: sketch sized from the fp count, recorded in sketch.items);
+    // gets a fresh index path, never a stale fp/bloom pair;
     // buildOnce publishes atomically (round-12 advice)
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_base_index", dir, version = 2),
+        graft.Staging.path("graft_dedup_base_index", dir),
         "_INDEX_READY") { tmp =>
       val (base, _) = baseBatchSplit(spark, dir, perturb = false)
       val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
@@ -1214,7 +1212,7 @@ object Dedup {
   private[graft] def dedupMergedIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_merged_index", dir, version = 2),
+        graft.Staging.path("graft_dedup_merged_index", dir),
         "_INDEX_READY") { tmp =>
       val idx = java.nio.file.Paths.get(dedupIndexPath(spark, dir))
       val baseSketch = java.nio.file.Files.readAllBytes(idx.resolve("sketch.bin"))
@@ -1404,10 +1402,9 @@ object Dedup {
     * because no textual key exists. */
   private[graft] def lshIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    // version = builder-algebra identity (shingle/minhash/band layout);
     // buildOnce publishes atomically (round-12 advice)
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_lsh_index", dir, version = 1),
+        graft.Staging.path("graft_dedup_lsh_index", dir),
         "_INDEX_READY") { tmp =>
       val (base, _) =
         baseBatchSplit(spark, dir, perturb = false, dense = true)
@@ -1913,6 +1910,32 @@ object Dedup {
         .orderBy("doc_a", "doc_b")
   }
 
+  /** Decimal-exact norm / pairwise-cosine / connected-component oracle
+    * fragments shared by the cluster-dedup oracles — one definition per
+    * exactness-critical fragment. `annCcSql` continues a `WITH
+    * RECURSIVE` list whose `pairs(va, vb)` CTE holds the verified edges:
+    * DuckDB recursive-CTE min-reachable-id components rolled up like
+    * [[clusterSummary]]. */
+  private val annNrmSql =
+    "CAST((SELECT SUM(CAST(CAST(e AS DOUBLE) * CAST(e AS DOUBLE) " +
+      "AS DECIMAL(30,12))) FROM unnest(embedding) t(e)) AS DOUBLE)"
+  private val annDcosSql =
+    "CAST((SELECT SUM(CAST(CAST(t.x AS DOUBLE) * CAST(t.y AS DOUBLE) " +
+      "AS DECIMAL(30,12))) FROM (SELECT unnest(a.embedding) AS x, " +
+      "unnest(b.embedding) AS y) t) AS DOUBLE) / sqrt(a.nrm * b.nrm)"
+  private val annCcSql =
+    """edges AS MATERIALIZED (
+      |  SELECT va AS a, vb AS b FROM pairs UNION ALL SELECT vb, va FROM pairs),
+      |reach(src, dst) AS (
+      |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
+      |  UNION
+      |  SELECT r.src, e2.b FROM reach r JOIN edges e2 ON r.dst = e2.a),
+      |comp AS (SELECT src AS v, MIN(dst) AS cluster FROM reach GROUP BY 1)
+      |SELECT cluster_size, COUNT(*) AS n_clusters,
+      |  CAST(SUM(cluster) AS BIGINT) AS sum_canonical
+      |FROM (SELECT cluster, COUNT(*) AS cluster_size FROM comp GROUP BY 1)
+      |GROUP BY 1 ORDER BY 1""".stripMargin
+
   /** Near-dup CLUSTER resolution: the verified pair list (same
     * construction as q_dedup_ngram_jaccard) turned into connected
     * components by min-label propagation run to a FIXPOINT
@@ -1934,22 +1957,12 @@ object Dedup {
       |    list_distinct(list_transform(range(1, len(ws) - 1),
       |      i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2])) AS s
       |  FROM ws),
-      |pairs AS (
-      |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
+      |pairs AS MATERIALIZED (
+      |  SELECT a.doc_id AS va, b.doc_id AS vb
       |  FROM sh a JOIN sh b ON a.lang = b.lang AND a.doc_id < b.doc_id
       |  WHERE 2 * len(list_intersect(a.s, b.s))
       |        >= len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))),
-      |edges AS (
-      |  SELECT doc_a AS a, doc_b AS b FROM pairs
-      |  UNION ALL SELECT doc_b, doc_a FROM pairs),
-      |reach(src, dst) AS (
-      |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-      |  UNION
-      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-      |comp AS (SELECT src AS doc, MIN(dst) AS cluster FROM reach GROUP BY 1)
-      |SELECT cluster_size, COUNT(*) AS n_clusters, CAST(SUM(cluster) AS BIGINT) AS sum_canonical
-      |FROM (SELECT cluster, COUNT(*) AS cluster_size FROM comp GROUP BY 1)
-      |GROUP BY 1 ORDER BY 1""".stripMargin,
+      |""".stripMargin + annCcSql,
   ) { (spark, dir) =>
     val pairs = qDedupNgramJaccard.run(spark, dir).select("doc_a", "doc_b")
     graft.operators.ConnectedComponents.summarized(pairs)(clusterSummary)
@@ -1982,61 +1995,20 @@ object Dedup {
     * decimal-exact pair set. */
   val qDedupEmbedding: QueryDef = QueryDef.oracle(
     "q_dedup_embedding",
-    """WITH RECURSIVE n AS MATERIALIZED (
-      |  SELECT vec_id, embedding,
-      |    CAST((SELECT SUM(CAST(CAST(e AS DOUBLE) * CAST(e AS DOUBLE)
-      |            AS DECIMAL(30,12))) FROM unnest(embedding) t(e)) AS DOUBLE) AS nrm
+    s"""WITH RECURSIVE n AS MATERIALIZED (
+      |  SELECT vec_id, embedding, $annNrmSql AS nrm
       |  FROM embeddings WHERE vec_id < 512),
       |pairs AS MATERIALIZED (
-      |  SELECT ida AS va, idb AS vb FROM (
-      |    SELECT a.vec_id, b.vec_id,
-      |      CAST((SELECT SUM(CAST(CAST(t.x AS DOUBLE) * CAST(t.y AS DOUBLE)
-      |              AS DECIMAL(30,12)))
-      |            FROM (SELECT unnest(a.embedding) AS x, unnest(b.embedding) AS y) t)
-      |        AS DOUBLE) / sqrt(a.nrm * b.nrm) AS cos
-      |    FROM n a JOIN n b ON a.vec_id < b.vec_id) p(ida, idb, cos)
+      |  SELECT va, vb FROM (
+      |    SELECT a.vec_id AS va, b.vec_id AS vb, $annDcosSql AS cos
+      |    FROM n a JOIN n b ON a.vec_id < b.vec_id)
       |  WHERE cos >= 0.4),
-      |edges AS MATERIALIZED (
-      |  SELECT va AS a, vb AS b FROM pairs
-      |  UNION ALL SELECT vb, va FROM pairs),
-      |reach(src, dst) AS (
-      |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-      |  UNION
-      |  SELECT r.src, e.b FROM reach r JOIN edges e ON r.dst = e.a),
-      |comp AS (SELECT src AS v, MIN(dst) AS cluster FROM reach GROUP BY 1)
-      |SELECT cluster_size, COUNT(*) AS n_clusters,
-      |  CAST(SUM(cluster) AS BIGINT) AS sum_canonical
-      |FROM (SELECT cluster, COUNT(*) AS cluster_size FROM comp GROUP BY 1)
-      |GROUP BY 1 ORDER BY 1""".stripMargin,
+      |""".stripMargin + annCcSql,
   ) { (spark, dir) =>
     val pairs = Similarity.qSimCosinePairs.run(spark, dir)
       .select("id_a", "id_b")
     graft.operators.ConnectedComponents.summarized(pairs)(clusterSummary)
   }
-
-  /** Decimal-exact norm / pairwise-cosine / connected-component oracle
-    * fragments shared by the embedding-ANN dedup oracles (same algebra
-    * as the q_dedup_embedding oracle — one definition per
-    * exactness-critical fragment). */
-  private val annNrmSql =
-    "CAST((SELECT SUM(CAST(CAST(e AS DOUBLE) * CAST(e AS DOUBLE) " +
-      "AS DECIMAL(30,12))) FROM unnest(embedding) t(e)) AS DOUBLE)"
-  private val annDcosSql =
-    "CAST((SELECT SUM(CAST(CAST(t.x AS DOUBLE) * CAST(t.y AS DOUBLE) " +
-      "AS DECIMAL(30,12))) FROM (SELECT unnest(a.embedding) AS x, " +
-      "unnest(b.embedding) AS y) t) AS DOUBLE) / sqrt(a.nrm * b.nrm)"
-  private val annCcSql =
-    """edges AS MATERIALIZED (
-      |  SELECT va AS a, vb AS b FROM pairs UNION ALL SELECT vb, va FROM pairs),
-      |reach(src, dst) AS (
-      |  SELECT a, a FROM (SELECT DISTINCT a FROM edges)
-      |  UNION
-      |  SELECT r.src, e2.b FROM reach r JOIN edges e2 ON r.dst = e2.a),
-      |comp AS (SELECT src AS v, MIN(dst) AS cluster FROM reach GROUP BY 1)
-      |SELECT cluster_size, COUNT(*) AS n_clusters,
-      |  CAST(SUM(cluster) AS BIGINT) AS sum_canonical
-      |FROM (SELECT cluster, COUNT(*) AS cluster_size FROM comp GROUP BY 1)
-      |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** q_dedup_embedding_ann's oracle: hyperplane buckets via
     * [[VecSql.lshBucket]], the any-band-agrees test as one 2-bit-lane

@@ -114,13 +114,11 @@ object Graph {
     * [[graft.Staging]] path with atomic publication, like every other
     * persisted index. This also retires the round-12 race class the
     * PID-scoped overwrite path carried: two JVMs sharing /tmp (a test
-    * suite and a bench run) now read one immutable artifact. `version`
-    * = the layout algebra ([[orderGraphEdges]] + degree attach +
-    * 8-bucket/sorted src layout); bump when that algebra changes. */
+    * suite and a bench run) now read one immutable artifact. */
   private[graft] def prBucketLayoutPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_pr_bucket", dir, version = 1),
+        graft.Staging.path("graft_pr_bucket", dir),
         "_LAYOUT_READY") { tmp =>
       val edges = orderGraphEdges(spark, dir)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))

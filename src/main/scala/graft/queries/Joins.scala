@@ -619,10 +619,9 @@ object Joins {
     // mode("overwrite") build was ~1.6 s of the query's 2.1-2.3 s warm
     // wall at sf0.1, every execution, for bytes that never change.
     // Content-fingerprinted Staging path + atomic publication, exactly
-    // like every other persisted index; version = the layout algebra
-    // (projection + 8-bucket/sorted key layout) — bump when it changes.
+    // like every other persisted index.
     val layout = graft.Staging.buildOnce(
-        graft.Staging.path("graft_join_bucket", dir, version = 1),
+        graft.Staging.path("graft_join_bucket", dir),
         "_LAYOUT_READY") { tmp =>
       val t = Tables(spark, dir)
       // bucketed writes need a catalog name even for a one-shot build;

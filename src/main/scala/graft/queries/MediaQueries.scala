@@ -564,8 +564,8 @@ object MediaQueries {
     * decode and (b) both engines agree on the feature algebra — the
     * strongest judgment available for a lossy codec (closed-form pixel
     * oracles exist only for lossless containers; MediaSpec documents
-    * the cross-JDK caveat). The __STAGED marker resolves to the
-    * content-fingerprinted staged path at Verify dump time. Scale
+    * the cross-JDK caveat). The `__STAGED:<prefix>__` marker resolves
+    * to `Staging.path(prefix, sfDir)` at Verify dump time. Scale
     * shape: decode is scan-local per-row work over the container
     * parquet, features are one hash aggregate; payloads never ride a
     * shuffle (the only exchange is the output sort). */
@@ -573,7 +573,7 @@ object MediaQueries {
     "q_media_jpeg",
     """WITH r AS (
       |  SELECT media_id, width, height, raster
-      |  FROM read_parquet('__STAGED:graft_jpeg_media:v1__/rasters/*.parquet')),
+      |  FROM read_parquet('__STAGED:graft_jpeg_media__/rasters/*.parquet')),
       |b AS (
       |  SELECT media_id, width, height, len(raster) AS nb,
       |    unnest(raster) AS v, generate_subscripts(raster, 1) AS i

@@ -669,11 +669,10 @@ object Similarity {
     * scoring sees exactly the float32 values the index stores. */
   private[graft] def ivfIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    // version = builder-algebra identity (bump when the centroid/layout
-    // algebra changes); buildOnce publishes atomically — two JVMs sharing
-    // /tmp can no longer interleave overwrite writes (round-12 advice)
+    // buildOnce publishes atomically — two JVMs sharing /tmp can no
+    // longer interleave overwrite writes (round-12 advice)
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_ivf_index", dir, version = 1),
+        graft.Staging.path("graft_ivf_index", dir),
         "_INDEX_READY") { tmp =>
       val n = graft.Tables(spark, dir).embeddings
         .select(col("vec_id"), col("embedding"))
@@ -742,7 +741,7 @@ object Similarity {
   private[graft] def ivfBaseIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_ivf_base_index", dir, version = 1),
+        graft.Staging.path("graft_ivf_base_index", dir),
         "_INDEX_READY") { tmp =>
       val base = graft.Tables(spark, dir).embeddings
         .select(col("vec_id"), col("embedding"))
@@ -783,7 +782,7 @@ object Similarity {
   private[graft] def ivfMergeDeltaPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_ivf_merge_delta", dir, version = 1),
+        graft.Staging.path("graft_ivf_merge_delta", dir),
         "_SUCCESS") { tmp =>
       ivfMergeAssignments(spark, dir)
         .repartitionByRange(16, col("cluster"))
@@ -1039,18 +1038,16 @@ object Similarity {
     * sidecar decides HOW WIDE each read row is (8 dims instead of 64 —
     * the raw vectors stay in the base lists and are touched only for
     * the top-k re-score). Write-once; the staged path DERIVES from the
-    * resolved base-index path (round-15 advice): the sidecar's identity
-    * is base-index identity (corpus fingerprint × base version) × its
-    * own algebra version, so a bump of [[ivfIndexPath]]'s version — or
-    * any change that relocates the base — forces a sidecar rebuild and
-    * the "can never drift from the index it shadows" claim is
-    * structural, not assumed. Bump the `.jl_v1` suffix when the
-    * projection algebra ([[jlProjected]]) changes. */
+    * resolved base-index path (round-15 advice), which carries the
+    * corpus fingerprint and the engine code digest, so any change to
+    * the base or to [[jlProjected]] forces a sidecar rebuild and the
+    * "can never drift from the index it shadows" claim is structural,
+    * not assumed. */
   private[graft] def ivfJlIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     val base = ivfIndexPath(spark, dir)
     graft.Staging.buildOnce(
-        java.nio.file.Paths.get(base + ".jl_v1"),
+        java.nio.file.Paths.get(base + ".jl"),
         "_INDEX_READY") { tmp =>
       spark.read.parquet(s"$base/lists")
         .select(col("cluster"), col("vec_id"),

@@ -431,11 +431,8 @@ object Streaming {
   ) { (spark, dir) =>
     import spark.implicits._
     import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
+    graft.Graft.withConf(spark, "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       val out = EventsStream.read(spark, dir)
         .select(col("user_id"), col("value"))
         .as[(Long, Double)]
@@ -444,9 +441,6 @@ object Streaming {
           TimeMode.None(), OutputMode.Update())
         .toDF("user_id", "n_events", "max_value")
       lastSnapshotPerKey(spark, out, "user_id", Seq("n_events", "max_value"))
-    } finally prev match {
-      case Some(p) => spark.conf.set(key, p)
-      case None    => spark.conf.unset(key)
     }
   }
 

@@ -944,7 +944,7 @@ object TextAnalysis {
     * log-odds, `meta` = (prior_w, n_pos, n_neg, v). */
   private[graft] def nbModelPath(spark: SparkSession, dir: String): String =
     graft.Staging.buildOnce(
-        graft.Staging.path("graft_nb_model", dir, version = 1),
+        graft.Staging.path("graft_nb_model", dir),
         "_MODEL_READY") { tmp =>
       val (weights, meta) = nbTrain(nbLabeled(spark, dir))
       weights.coalesce(1).write.mode("overwrite")

@@ -115,7 +115,8 @@ object EventsStream {
         "lives in driver memory); this plan has no aggregation/deduplication " +
         "node, so its emission is O(input rows) — use runAggregated instead")
     val name = s"graft_stream_sink_${n.incrementAndGet()}"
-    scopedStateConf(spark) {
+    graft.Graft.withConf(spark,
+        "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
       val ckpt = ephemeralCheckpoint(name)
       val q = df.writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt.toString)
@@ -166,29 +167,13 @@ object EventsStream {
     * Each stateful operator keeps ONE state store per shuffle partition,
     * and every store pays a fixed load+commit cost per micro-batch (a
     * stream-stream join keeps FOUR per partition), so state parallelism
-    * is a capacity knob, not free parallelism: size it to state VOLUME.
-    * Cluster-scale jobs with big state raise `graft.streaming.statePartitions`
-    * toward the core count; the default 8 suits backfills whose state
-    * fits a handful of stores — at 32 shuffle partitions the tiny-state
-    * judged queries spent 48 s of cumulative wall in 128 near-empty
-    * store commits. Scoped to query startup (the value is captured into
-    * the query's checkpoint at first batch) and restored after.
-    *
-    * SINGLE-THREADED ASSUMPTION: this temporarily mutates the shared
-    * session's `spark.sql.shuffle.partitions`, so any batch query or
-    * second stream PLANNED concurrently on the same session during the
-    * window would silently pick up the scoped value, and overlapping
-    * scopes would restore stale values. All call sites in this repo are
-    * sequential (Verify/Bench run the catalog one query at a time). A
-    * concurrent deployment should instead pass the partition count per
-    * query (writeStream option / cloned session), not via shared conf. */
-  private def scopedStateConf[A](spark: SparkSession)(run: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key,
-      spark.conf.getOption("graft.streaming.statePartitions").getOrElse("8"))
-    try run finally spark.conf.set(key, prev)
-  }
+    * is a capacity choice, not free parallelism: size it to state VOLUME.
+    * 8 suits backfills whose state fits a handful of stores — at 32
+    * shuffle partitions the tiny-state judged queries spent 48 s of
+    * cumulative wall in 128 near-empty store commits. Scoped to query
+    * startup (the value is captured into the query's checkpoint at first
+    * batch) by [[graft.Graft.withConf]]. */
+  private val StatePartitions = 8
 
   /** Checkpoint dir for a run-to-completion backfill query: RAM-backed
     * (/dev/shm) when the OS provides it WITH headroom (≥1 GiB usable —
@@ -223,24 +208,8 @@ object EventsStream {
     * drop it from the exit-hook queue. Best-effort: a failure leaves the
     * dir to the backstop hook. */
   private def deleteNow(dir: java.nio.file.Path): Unit = {
-    deleteRecursively(dir)
+    graft.Staging.deleteRecursively(dir)
     toDelete.remove(dir)
-  }
-
-  /** Walk-and-delete with the stream CLOSED — `Files.walk` keeps
-    * directory handles open until close(), and this runs once per
-    * streaming query in a long-lived low-GC session, so leaking the
-    * stream would accumulate fds toward the process limit. Shared by the
-    * immediate path and the exit hook. Best-effort by design. */
-  private def deleteRecursively(dir: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
-    try {
-      val walk = Files.walk(dir)
-      try walk.sorted(Comparator.reverseOrder[Path]())
-        .forEach(p => Files.deleteIfExists(p))
-      finally walk.close()
-    } catch { case _: Throwable => () }
   }
 
   /** Run a streaming DataFrame with the rollup INSIDE the stream's sink
@@ -267,7 +236,8 @@ object EventsStream {
     val empty = spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
     perBatch(empty).write.mode("append").parquet(out.toString)
-    scopedStateConf(spark) {
+    graft.Graft.withConf(spark,
+        "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
       val ckpt = ephemeralCheckpoint(s"agg_$id")
       val q = df.writeStream
         .outputMode(mode)
@@ -292,7 +262,7 @@ object EventsStream {
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
       var dir = toDelete.poll()
       while (dir != null) {
-        deleteRecursively(dir)
+        graft.Staging.deleteRecursively(dir)
         dir = toDelete.poll()
       }
     }))

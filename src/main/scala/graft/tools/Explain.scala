@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected catalog queries
   * (plan review per the scale checklist — pushdown, pruning, join
   * strategy, codegen spans). Not part of the judged surface. */
@@ -11,10 +9,7 @@ object Explain {
     // width — parallelism-gated shapes (the compute-dense scan guard)
     // are invisible at local[4]
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = graft.Graft.builder(s"local[$cpus]", cpus.toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

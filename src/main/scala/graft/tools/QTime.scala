@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time selected catalog queries repeatedly (cold + warm runs)
   * to separate JIT/planning overhead from real execution cost.
   *
@@ -16,15 +14,10 @@ import org.apache.spark.sql.SparkSession
 object QTime {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // GRAFT_SHUFFLE_PARTS: A/B the partition count without changing
-      // thread parallelism (the config-at-scale experiments)
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", cpus))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("graft.streaming.statePartitions",
-        sys.env.getOrElse("GRAFT_STATE_PARTS", "8"))
+    // GRAFT_SHUFFLE_PARTS: A/B the partition count without changing
+    // thread parallelism (the config-at-scale experiments)
+    val spark = graft.Graft.builder(s"local[$cpus]",
+        sys.env.getOrElse("GRAFT_SHUFFLE_PARTS", cpus).toInt)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

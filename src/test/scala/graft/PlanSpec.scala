@@ -318,7 +318,7 @@ class PlanSpec extends SparkSpec {
 
   test("projected-IVF retrieval: scores the 8-dim sidecar, never retrains, never scans raw lists") {
     // the composition contract: candidate scoring reads the projected
-    // sidecar (<base index>.jl_v1/plists — 8-dim rows; the path derives
+    // sidecar (<base index>.jl/plists — 8-dim rows; the path derives
     // from the base index identity since round 16), the quantizer
     // comes off the persisted index, no centroid-training aggregate runs
     // at query time, and the 64-dim base lists are never rescanned (raw
@@ -326,7 +326,7 @@ class PlanSpec extends SparkSpec {
     // ≤40-row exact re-score)
     val q = Registry.all.find(_.name == "q_embed_project_ivf").get
     val p = q.run(spark, sf).queryExecution.executedPlan.toString
-    assert(p.contains(".jl_v1") && p.contains("plists"),
+    assert(p.contains(".jl/plists"),
       s"projected sidecar absent from the read plan:\n${p.take(4000)}")
     assert(!p.toLowerCase.contains("vectorcentroid"),
       s"centroid TRAINING aggregate at query time:\n${p.take(4000)}")

@@ -4,8 +4,8 @@ import java.nio.file.{Files, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Staleness pins for the content-addressed staging key and the
-  * compute-dense split memo: an input rewritten in place must never be
-  * served the old input's answer. */
+  * compute-dense split memo: an input rewritten in place, or an engine
+  * rebuilt with different code, must never be served the old answer. */
 class StagingSpec extends AnyFunSuite {
 
   private def tmpDir(tag: String): Path = Files.createTempDirectory(s"graft_$tag")
@@ -40,5 +40,46 @@ class StagingSpec extends AnyFunSuite {
     Files.write(f, Array.fill[Byte](200)(2))
     assert(estimate() == 2L && runs == 2,
       "a file rewritten in place kept its stale split estimate")
+  }
+
+  test("code digest is stable on one class root and a one-byte class change moves the staged path") {
+    val a = tmpDir("code_a")
+    Files.createDirectories(a.resolve("graft/x"))
+    Files.write(a.resolve("graft/A.class"), Array.tabulate[Byte](300)(_.toByte))
+    Files.write(a.resolve("graft/x/B.class"), Array.fill[Byte](200)(3))
+    val d = Staging.codeDigest(a)
+    assert(Staging.codeDigest(a) == d, "digest differs between two reads of one root")
+    // the same classes as jar entries (a packaged engine) digest alike
+    val jar = tmpDir("code_jar").resolve("engine.jar")
+    val zip = new java.util.zip.ZipOutputStream(Files.newOutputStream(jar))
+    try Seq("graft/x/B.class", "graft/A.class").foreach { n =>
+      zip.putNextEntry(new java.util.zip.ZipEntry(n))
+      zip.write(Files.readAllBytes(a.resolve(n)))
+      zip.closeEntry()
+    } finally zip.close()
+    assert(Staging.codeDigest(jar) == d, "jar and directory forms disagree")
+
+    val b = tmpDir("code_b")
+    Files.createDirectories(b.resolve("graft/x"))
+    Files.copy(a.resolve("graft/x/B.class"), b.resolve("graft/x/B.class"))
+    val bytes = Files.readAllBytes(a.resolve("graft/A.class"))
+    bytes(150) = (bytes(150) ^ 1).toByte
+    Files.write(b.resolve("graft/A.class"), bytes)
+    val e = Staging.codeDigest(b)
+    assert(e != d, "a changed class kept the old code digest")
+
+    val src = tmpDir("code_src").toString
+    val (pa, pb) = (Staging.pathFor(d, "graft_t", src), Staging.pathFor(e, "graft_t", src))
+    assert(pa != pb, "changed builder code resolved to the same staged path")
+    assert(pa.getFileName.toString.startsWith("graft_t_"))
+    // the running engine's digest names every staged path
+    assert(Staging.path("graft_t", src) == Staging.pathFor(Staging.code, "graft_t", src))
+  }
+
+  test("code digest throws instead of keying on nothing when no engine class is readable") {
+    val empty = tmpDir("code_empty")
+    intercept[Exception](Staging.codeDigest(empty))
+    Files.createDirectories(empty.resolve("graft"))
+    intercept[IllegalStateException](Staging.codeDigest(empty))
   }
 }

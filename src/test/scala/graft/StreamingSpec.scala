@@ -267,24 +267,39 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("state-partition knob scopes to the backfill and restores the session conf") {
-    val key = "spark.sql.shuffle.partitions"
-    val before = spark.conf.get(key)
-    spark.conf.set("graft.streaming.statePartitions", "3")
-    try {
-      val out = graft.streaming.EventsStream.runToTable(spark,
-        graft.streaming.EventsStream.read(spark, sf)
-          .withWatermark("ts", "60 seconds")
-          .groupBy(window(col("ts"), "1 day")).agg(count(lit(1)).as("n")),
-        "append")
-      // the sink table's data was produced by the stream's (scoped) conf;
-      // the session's own shuffle partitioning must be untouched after
-      assert(spark.conf.get(key) == before,
-        s"session conf leaked: ${spark.conf.get(key)} != $before")
-      // state files were laid out at the scoped partition count: the
-      // aggregate ran, produced rows, and the session still answers
-      // batch queries under its own conf
-      assert(out.count() > 0)
-    } finally spark.conf.unset("graft.streaming.statePartitions")
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val before = spark.conf.getAll
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    // events reach listeners in order, so all progress is in once the
+    // termination event arrives
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(s => widths.add(s.numShufflePartitions))
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = done.countDown()
+    }
+    spark.streams.addListener(listener)
+    val out =
+      try {
+        val t = graft.streaming.EventsStream.runToTable(spark,
+          graft.streaming.EventsStream.read(spark, sf)
+            .withWatermark("ts", "60 seconds")
+            .groupBy(window(col("ts"), "1 day")).agg(count(lit(1)).as("n")),
+          "append")
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+          "no termination event")
+        t
+      } finally spark.streams.removeListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(!widths.isEmpty && widths.asScala.forall(_ == 8L),
+      s"state operators ran at ${widths.asScala.toList} shuffle partitions, not 8")
+    // the session's own conf is untouched after the backfill, and the
+    // session still answers batch queries under it
+    assert(spark.conf.getAll == before,
+      s"session conf changed: ${spark.conf.getAll.toSet diff before.toSet}")
+    assert(out.count() > 0)
   }
 
   test("streaming sessionization equals the batch twin on the watermark-closed domain") {
