@@ -29,12 +29,23 @@ object Graft {
       // 10k entries keeps one session's working set resident; a static
       // conf, so it must ride the builder, not the session.
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+      // Spark keys its Janino class cache on (thread context class
+      // loader, source). Every streaming query runs in a cloned session
+      // with a new sessionUUID, and with artifact isolation on each task
+      // carries that session's artifact state, so the executor builds a
+      // fresh class loader per stream run and recompiles every generated
+      // class it had already compiled (27 per warm perfbench `streaming`
+      // pass, all byte-identical). The engine adds no per-session jars or
+      // files, so isolation protects nothing here. A static conf: it
+      // must ride the builder, not the session.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
 
   /** Run `body` with session confs `settings` in force, then put each key
     * back as it was found: set to its old value, or unset if it had none.
-    * The one place engine code changes session conf after construction
-    * (fixpoint widths, streaming state width, state-store provider).
+    * Apart from [[register]]'s one-time setup, the one place engine code
+    * changes session conf after construction (fixpoint widths, streaming
+    * state width, state-store provider).
     *
     * SINGLE-THREADED ASSUMPTION: the session is shared, so a query or
     * stream PLANNED on it by another thread inside the window picks up
@@ -55,8 +66,18 @@ object Graft {
   /** Attach graft functions to an existing session (e.g. one owned by a
     * host application that can't pass extensions at build time). Must
     * register the same set as GraftExtensions — RegistrySmokeSpec pins
-    * the parity so a function added to one path can't miss the other. */
+    * the parity so a function added to one path can't miss the other.
+    * Also sets the event-timestamp conf [[builder]] sets, which the
+    * events readers rely on.
+    *
+    * What this cannot do: a host session built elsewhere keeps artifact
+    * isolation on (`spark.sql.artifact.isolation.enabled` is static, so
+    * it cannot change after the session is created), and every stream
+    * run then recompiles its executor-side generated classes. Build the
+    * session with [[builder]], or pass that conf at build time, to reuse
+    * them. */
   def register(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     graft.functions.GraftFunctions.ensureRegistered(spark)
     Seq(
       (graft.functions.HyperplaneBucket.ident,

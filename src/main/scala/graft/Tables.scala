@@ -24,10 +24,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
   def lineitem: DataFrame   = t("lineitem")
   /** events.ts normalized to a session-TZ (UTC) TIMESTAMP — see
     * [[Tables.normalizeTs]] for the generator-version schemas handled. */
-  def events: DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    Tables.normalizeTs(t("events"))
-  }
+  def events: DataFrame = Tables.normalizeTs(t("events"))
   /** The document corpus, UNGUARDED (round 21). Round 20 routed every
     * read through the [[computeDense]] repartition guard; the driver's
     * full-catalog bench proved that blanket scope NET-NEGATIVE: the
@@ -148,7 +145,8 @@ object Tables {
     *
     * Early generators wrote parquet TIMESTAMP(NANOS), which Spark's
     * reader rejects outright ([PARQUET_TYPE_ILLEGAL]); under
-    * `spark.sql.legacy.parquet.nanosAsLong` it arrives as a raw-nanos
+    * `spark.sql.legacy.parquet.nanosAsLong` (set by Graft.builder and
+    * Graft.register, never per read) it arrives as a raw-nanos
     * LONG and is floored to microseconds (DuckDB's `epoch_us` floors
     * identically, and floor is monotone, so ordering and µs-aligned
     * range predicates agree). The round-10 generator writes native

@@ -40,7 +40,6 @@ object EventsStream {
     * limited by maxFilesPerTrigger. */
   private[graft] def readTable(spark: SparkSession, dir: String,
       file: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val base = file.stripSuffix(".parquet")
     val path = s"$dir/$file"
     val schema = schemas.computeIfAbsent(path,
@@ -108,23 +107,30 @@ object EventsStream {
     * driver memory. Unbounded emissions (raw joined pairs, per-entity
     * rows) go through [[runAggregated]] instead. The contract is
     * enforced structurally, not by convention: the plan must carry a
-    * bounded-emission operator or the call throws before starting. */
+    * bounded-emission operator or the call throws before starting.
+    *
+    * The memory sink registers its rows as a temp view. The view is
+    * dropped once `spark.table` has resolved it (or the run failed), so
+    * a long-lived session keeps no view, and no sink rows, per past run.
+    * The returned frame is already analyzed and holds the sink itself. */
   def runToTable(spark: SparkSession, df: DataFrame, mode: String): DataFrame = {
     require(hasBoundedEmission(df),
       "runToTable is for aggregated/bounded streams only (the memory sink " +
         "lives in driver memory); this plan has no aggregation/deduplication " +
         "node, so its emission is O(input rows) — use runAggregated instead")
     val name = s"graft_stream_sink_${n.incrementAndGet()}"
-    graft.Graft.withConf(spark,
-        "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
-      val ckpt = ephemeralCheckpoint(name)
-      val q = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", ckpt.toString)
-        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteNow(ckpt)
-    }
-    spark.table(name)
+    try {
+      graft.Graft.withConf(spark,
+          "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
+        val ckpt = ephemeralCheckpoint(name)
+        val q = df.writeStream.format("memory").queryName(name)
+          .option("checkpointLocation", ckpt.toString)
+          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+        deleteNow(ckpt)
+      }
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
   }
 
   /** True iff the stream's emission volume is bounded by GROUPS rather

@@ -6,13 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites (one JVM via Test/fork). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
+    // the engine's own session contract (Graft.builder), so suites run
+    // under the confs Bench, Verify and perfbench run under
+    val s = Graft.builder("local[4]", 4)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .appName("graft-test")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
