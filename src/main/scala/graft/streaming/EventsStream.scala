@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
@@ -17,13 +18,38 @@ import org.apache.spark.sql.types.StructType
   * and the sink contents are returned. Semantics are identical to a long-
   * running deployment; only the trigger differs — exactly how a 100 TB
   * backfill of a streaming job is run in production.
+  *
+  * State width. Each stateful operator keeps one state store per shuffle
+  * partition (a stream-stream join keeps four), and every store pays a
+  * fixed load and commit per micro-batch, so the width of a backfill is
+  * sized to its volume, not to the core count: [[runToTable]] and
+  * [[runAggregated]] derive it once, before `start()`, by the target-size
+  * rule AQE's partition coalescing (Spark's `ShufflePartitionsUtil`)
+  * applies to a batch shuffle — see [[stateWidth]]. A stateful stream
+  * cannot let AQE coalesce its shuffle, because the width is fixed into
+  * the checkpoint at the first batch; these checkpoints are ephemeral,
+  * one per run, so choosing the width up front is safe. The volume is
+  * the bytes of the stream's source files ([[sourceBytes]]): parquet
+  * bytes stand in for the shuffle bytes AQE would have measured.
   */
 object EventsStream {
 
   private val n = new AtomicInteger(0)
 
-  /** Footer schema per events file, read once per path — not per query. */
-  private val schemas = new ConcurrentHashMap[String, StructType]()
+  /** Footer schema per table path with the (size, mtime) it was read
+    * at: read once per version of the table, not per query. A file
+    * rewritten in place, or a table directory written anew, changes its
+    * stamp and is read again. */
+  private val schemas = new ConcurrentHashMap[String, (Long, Long, StructType)]()
+
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = java.nio.file.Paths.get(path)
+    val size = java.nio.file.Files.size(p)
+    val mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
+    schemas.compute(path, (_, old) =>
+      if (old != null && old._1 == size && old._2 == mtime) old
+      else (size, mtime, spark.read.parquet(path).schema))._3
+  }
 
   /** The events table as an unbounded source (single-file glob → one
     * micro-batch at test scale; a directory of files at production scale,
@@ -42,8 +68,7 @@ object EventsStream {
       file: String): DataFrame = {
     val base = file.stripSuffix(".parquet")
     val path = s"$dir/$file"
-    val schema = schemas.computeIfAbsent(path,
-      p => spark.read.parquet(p).schema)
+    val schema = schemaOf(spark, path)
     // the file source wants a directory of FILES; stage one containing
     // symlinks to the (read-only) events data. A single-file table gets
     // one symlink; a Spark-written table (a DIRECTORY of part files —
@@ -92,8 +117,14 @@ object EventsStream {
             } finally parts.close()
         }
       } else {
+        // keyed on a digest of the absolute source path, so no two sources
+        // share a link: a second read would re-point a stream already
+        // built over the first
+        val digest = java.security.MessageDigest.getInstance("MD5")
+          .digest(src.toString.getBytes("UTF-8")).take(8)
+          .map(b => f"$b%02x").mkString
         val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          s"graft_${base}_${dir.hashCode.toHexString}")
+          s"graft_${base}_$digest")
         java.nio.file.Files.createDirectories(out)
         ensureLink(out.resolve(file), src)
         out
@@ -121,7 +152,7 @@ object EventsStream {
     val name = s"graft_stream_sink_${n.incrementAndGet()}"
     try {
       graft.Graft.withConf(spark,
-          "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
+          "spark.sql.shuffle.partitions" -> stateWidth(spark, df).toString) {
         val ckpt = ephemeralCheckpoint(name)
         val q = df.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", ckpt.toString)
@@ -169,17 +200,51 @@ object EventsStream {
     bounded(df.queryExecution.analyzed)
   }
 
-  /** State-store partition count for the bounded-backfill helpers here.
-    * Each stateful operator keeps ONE state store per shuffle partition,
-    * and every store pays a fixed load+commit cost per micro-batch (a
-    * stream-stream join keeps FOUR per partition), so state parallelism
-    * is a capacity choice, not free parallelism: size it to state VOLUME.
-    * 8 suits backfills whose state fits a handful of stores — at 32
-    * shuffle partitions the tiny-state judged queries spent 48 s of
-    * cumulative wall in 128 near-empty store commits. Scoped to query
-    * startup (the value is captured into the query's checkpoint at first
-    * batch) by [[graft.Graft.withConf]]. */
-  private val StatePartitions = 8
+  /** State-store width for a backfill of `df`: [[stateWidth]] over its
+    * [[sourceBytes]], read from the session's own confs (default
+    * parallelism, `spark.sql.shuffle.partitions`, AQE's
+    * `advisoryPartitionSizeInBytes` and
+    * `coalescePartitions.minPartitionSize`). Scoped to the run by
+    * [[graft.Graft.withConf]] (the value is captured into the query's
+    * checkpoint at the first batch). */
+  private[graft] def stateWidth(spark: SparkSession, df: DataFrame): Int = {
+    val conf = spark.sessionState.conf
+    stateWidth(sourceBytes(spark, df), spark.sparkContext.defaultParallelism,
+      conf.defaultNumShufflePartitions,
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      conf.getConf(SQLConf.COALESCE_PARTITIONS_MIN_PARTITION_SIZE))
+  }
+
+  /** AQE's coalescing target applied to `bytes` of stream input:
+    * `target = max(minPartition, min(advisory, ceil(bytes / parallelism)))`
+    * and `width = clamp(ceil(bytes / target), 1, shufflePartitions)`.
+    * Parallelism first: a small input still spreads over up to
+    * `parallelism` stores once each holds `minPartition` bytes, so a
+    * per-row state closure keeps some parallelism; a tiny input gets one
+    * store. */
+  private[graft] def stateWidth(bytes: Long, parallelism: Int,
+      shufflePartitions: Int, advisory: Long, minPartition: Long): Int = {
+    def ceilDiv(a: Long, b: Long): Long = (a + b - 1) / b
+    val target = math.max(minPartition,
+      math.min(advisory, ceilDiv(bytes, parallelism)))
+    math.max(1L, math.min(ceilDiv(bytes, target), shufflePartitions.toLong)).toInt
+  }
+
+  /** Bytes of the files under each distinct file-source leaf of `df`
+    * (each [[readTable]] link dir; one entry per source the query reads,
+    * so a stream-stream join over two reads counts both). Measured
+    * through Hadoop `FileSystem`, which follows the links. A leaf with no
+    * path (a memory or rate source) counts 0. */
+  private[graft] def sourceBytes(spark: SparkSession, df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
+    val hadoop = spark.sessionState.newHadoopConf()
+    df.queryExecution.analyzed.collect { case r: StreamingRelation => r }
+      .distinct.flatMap(_.dataSource.options.get("path"))
+      .map { dir =>
+        val p = new org.apache.hadoop.fs.Path(dir)
+        p.getFileSystem(hadoop).getContentSummary(p).getLength
+      }.sum
+  }
 
   /** Checkpoint dir for a run-to-completion backfill query: RAM-backed
     * (/dev/shm) when the OS provides it WITH headroom (≥1 GiB usable —
@@ -243,7 +308,7 @@ object EventsStream {
       new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
     perBatch(empty).write.mode("append").parquet(out.toString)
     graft.Graft.withConf(spark,
-        "spark.sql.shuffle.partitions" -> StatePartitions.toString) {
+        "spark.sql.shuffle.partitions" -> stateWidth(spark, df).toString) {
       val ckpt = ephemeralCheckpoint(s"agg_$id")
       val q = df.writeStream
         .outputMode(mode)

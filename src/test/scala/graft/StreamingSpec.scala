@@ -266,13 +266,14 @@ class StreamingSpec extends SparkSpec {
     assert(a == b && a == 123457189123L + 200001L)
   }
 
-  test("state-partition knob scopes to the backfill and restores the session conf") {
+  /** Runs `body`, which runs one stream query, and returns every
+    * stateful operator's `numShufflePartitions` from its progress events.
+    * Events reach listeners in order, so all progress is in once the
+    * termination event arrives. */
+  private def stateWidthsOf[A](body: => A): (A, List[Long]) = {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import StreamingQueryListener._
-    val before = spark.conf.getAll
     val widths = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    // events reach listeners in order, so all progress is in once the
-    // termination event arrives
     val done = new java.util.concurrent.CountDownLatch(1)
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: QueryStartedEvent): Unit = ()
@@ -283,23 +284,132 @@ class StreamingSpec extends SparkSpec {
     spark.streams.addListener(listener)
     val out =
       try {
-        val t = graft.streaming.EventsStream.runToTable(spark,
-          graft.streaming.EventsStream.read(spark, sf)
-            .withWatermark("ts", "60 seconds")
-            .groupBy(window(col("ts"), "1 day")).agg(count(lit(1)).as("n")),
-          "append")
+        val out = body
         assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
           "no termination event")
-        t
+        out
       } finally spark.streams.removeListener(listener)
     import scala.jdk.CollectionConverters._
-    assert(!widths.isEmpty && widths.asScala.forall(_ == 8L),
-      s"state operators ran at ${widths.asScala.toList} shuffle partitions, not 8")
+    (out, widths.asScala.toList)
+  }
+
+  test("state-partition knob scopes to the backfill and restores the session conf") {
+    val before = spark.conf.getAll
+    val df = graft.streaming.EventsStream.read(spark, sf)
+      .withWatermark("ts", "60 seconds")
+      .groupBy(window(col("ts"), "1 day")).agg(count(lit(1)).as("n"))
+    val width = graft.streaming.EventsStream.stateWidth(spark, df)
+    val (out, widths) = stateWidthsOf {
+      graft.streaming.EventsStream.runToTable(spark, df, "append")
+    }
+    assert(widths.nonEmpty && widths.forall(_ == width),
+      s"state operators ran at $widths shuffle partitions, not the derived $width")
     // the session's own conf is untouched after the backfill, and the
     // session still answers batch queries under it
     assert(spark.conf.getAll == before,
       s"session conf changed: ${spark.conf.getAll.toSet diff before.toSet}")
     assert(out.count() > 0)
+  }
+
+  test("state width: AQE's coalescing target over the source bytes") {
+    import graft.streaming.EventsStream.stateWidth
+    val mb = 1L << 20
+    val (adv, min) = (64 * mb, mb) // Spark's defaults for the two AQE sizes
+    assert(stateWidth(0L, 4, 4, adv, min) == 1)
+    // the sf0.1 events file, at 4 and at 32 cores
+    assert(stateWidth(2045762L, 4, 4, adv, min) == 2)
+    assert(stateWidth(2045762L, 32, 32, adv, min) == 2)
+    assert(stateWidth(4 * mb, 4, 4, adv, min) == 4)
+    assert(stateWidth(200 * mb, 4, 200, adv, min) == 4)
+    assert(stateWidth(100L << 40, 32, 200, adv, min) == 200)
+  }
+
+  test("each stateful operator runs at the width derived from its source bytes") {
+    // half the events file as AQE's minimum partition size: one events
+    // stream then derives 2 stores and a stream-stream join (two reads of
+    // the file) derives 4, so the width follows the bytes, not a constant
+    val bytes = java.nio.file.Files.size(java.nio.file.Paths.get(s"$sf/events.parquet"))
+    val minSize = bytes / 2
+    val conf = spark.sessionState.conf
+    def expected(leaves: Int) = graft.streaming.EventsStream.stateWidth(
+      leaves * bytes, spark.sparkContext.defaultParallelism,
+      conf.defaultNumShufflePartitions,
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
+      minSize)
+    assert(expected(1) == 2 && expected(2) == 4)
+    Graft.withConf(spark,
+        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> minSize.toString) {
+      Seq(Streaming.qStreamTumbling -> 1, Streaming.qStreamJoin -> 2).foreach {
+        case (q, leaves) =>
+          val (_, widths) = stateWidthsOf(q.run(spark, sf).collect())
+          assert(widths.nonEmpty && widths.forall(_ == expected(leaves)),
+            s"${q.name}: state operators ran at $widths, not ${expected(leaves)}")
+      }
+    }
+  }
+
+  test("every backfill stream returns the same rows at the derived and the full width") {
+    // sf0.001 derives one store per operator; a 1-byte minimum partition
+    // size makes the rule choose the session's full shuffle width
+    val full = Seq("spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1")
+    val probe = graft.streaming.EventsStream.read(spark, sf)
+    assert(graft.streaming.EventsStream.stateWidth(spark, probe) == 1)
+    Graft.withConf(spark, full: _*) {
+      assert(graft.streaming.EventsStream.stateWidth(spark, probe) ==
+        spark.sessionState.conf.defaultNumShufflePartitions)
+    }
+    val streams = graft.queries.Registry.all.filter(_.name.startsWith("q_stream_"))
+    assert(streams.size == 13)
+    streams.foreach { q =>
+      def rows = q.run(spark, sf).collect().map(_.toString).sorted.toSeq
+      val derived = rows
+      val wide = Graft.withConf(spark, full: _*)(rows)
+      assert(derived.nonEmpty && derived == wide,
+        s"${q.name}: rows differ between the derived and the full state width")
+    }
+  }
+
+  /** `rows` as the single parquet file `file`, replacing any file there. */
+  private def writeParquetFile(rows: org.apache.spark.sql.DataFrame,
+      file: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tmp = Files.createTempDirectory("graft_pq_")
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val ls = Files.list(tmp)
+    val one = try ls.filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get() finally ls.close()
+    Files.createDirectories(file.getParent)
+    Files.move(one, file, StandardCopyOption.REPLACE_EXISTING)
+    graft.Staging.deleteRecursively(tmp)
+  }
+
+  test("readTable keeps apart sf dirs whose paths share a String.hashCode") {
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("graft_links_")
+    val (a, b) = (root.resolve("Aa"), root.resolve("BB"))
+    assert(a.toString.hashCode == b.toString.hashCode)
+    writeParquetFile(spark.range(3).toDF("id"), a.resolve("t.parquet"))
+    writeParquetFile(spark.range(5).toDF("id"), b.resolve("t.parquet"))
+    // build the stream over Aa, then read BB before Aa's stream runs
+    val overA = graft.streaming.EventsStream.readTable(spark, a.toString, "t.parquet")
+    graft.streaming.EventsStream.readTable(spark, b.toString, "t.parquet")
+    val n = graft.streaming.EventsStream.runToTable(spark,
+      overA.agg(count(lit(1)).as("n")), "complete").head().getLong(0)
+    assert(n == 3, s"the stream over Aa read $n rows, not its own 3")
+    graft.Staging.deleteRecursively(root)
+  }
+
+  test("readTable reads the schema again after the file is rewritten in place") {
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("graft_schema_")
+    val file = dir.resolve("t.parquet")
+    writeParquetFile(spark.range(3).toDF("id"), file)
+    assert(graft.streaming.EventsStream.readTable(spark, dir.toString, "t.parquet")
+      .columns.toSeq == Seq("id"))
+    writeParquetFile(spark.range(3).toDF("id").withColumn("extra", col("id") * 2), file)
+    assert(graft.streaming.EventsStream.readTable(spark, dir.toString, "t.parquet")
+      .columns.toSeq == Seq("id", "extra"))
+    graft.Staging.deleteRecursively(dir)
   }
 
   test("streaming sessionization equals the batch twin on the watermark-closed domain") {
