@@ -18,6 +18,30 @@ package graft
   * can't mistake "no data" for "flat".
   */
 object Forensics {
+  /** Block until every event posted to the listener bus so far has been
+    * delivered, so counters a `SparkListener` keeps are complete for the
+    * work already done. `listenerBus.waitUntilEmpty` is `private[spark]`,
+    * so it is reached by reflection; if the accessor ever disappears this
+    * falls back to a 300 ms sleep — in that mode, under heavy stages,
+    * task-end events can land after the snapshot. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    try {
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      val wait = bus.getClass.getMethods.find(m =>
+        m.getName == "waitUntilEmpty" && m.getParameterCount == 1 &&
+          m.getParameterTypes()(0) == java.lang.Long.TYPE)
+      wait match {
+        case Some(m) => m.invoke(bus, java.lang.Long.valueOf(5000L)); ()
+        case None => Thread.sleep(300)
+      }
+    } catch {
+      // NonFatal only: swallowing OOM/fatal errors (or an interrupt,
+      // without restoring the flag) into a 300 ms sleep hid them
+      case _: InterruptedException =>
+        Thread.currentThread().interrupt()
+      case scala.util.control.NonFatal(_) => Thread.sleep(300)
+    }
+
   /** Cumulative HotSpot JIT compilation milliseconds (all compiler
     * threads). Deltas around a query measure how much re-JIT the query
     * paid — the direct cold-code-flushing evidence. */

@@ -532,7 +532,7 @@ object Media {
         }
       }.write.mode("overwrite").parquet(tmp.toString)
     }
-    spark.read.parquet(out.toString).as[MediaRow]
+    graft.Tables.parquet(spark, out.toString).as[MediaRow]
   }
 
   /** Decode + feature extraction, batched per partition. Image payloads

@@ -284,7 +284,7 @@ object Aggregates {
       |  SELECT 'TOTAL', COUNT(DISTINCT o_custkey) FROM orders)
       |ORDER BY scope""".stripMargin,
   ) { (spark, dir) =>
-    val sk = spark.read.parquet(monthlySketchPath(spark, dir))
+    val sk = Tables.parquet(spark, monthlySketchPath(spark, dir))
     // day-2 economics: per-year AND global rollups from the same tiny
     // sketch table — two scans of O(months) rows, zero raw-data reads
     val byYear = sk

@@ -1152,7 +1152,7 @@ object Dedup {
     val idx = dedupIndexPath(spark, dir)
     val sketchBytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(idx, "sketch.bin"))
-    val indexFp = spark.read.parquet(s"$idx/fps")
+    val indexFp = Tables.parquet(spark, s"$idx/fps")
     val (_, batch) = baseBatchSplit(spark, dir, perturb = false)
     indexedAdmission(indexFp, sketchBytes, batch)
   }
@@ -1194,7 +1194,7 @@ object Dedup {
   private[graft] def dedupMergeDelta(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val idx = dedupIndexPath(spark, dir)
-    val indexFp = spark.read.parquet(s"$idx/fps")
+    val indexFp = Tables.parquet(spark, s"$idx/fps")
     val docs = Tables(spark, dir).documents.select("doc_id", "text", "source")
     val batchA = docs.filter(Scramble(col("doc_id")) % 8 === 0)
     val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
@@ -1279,8 +1279,8 @@ object Dedup {
     val merged = dedupMergedIndexPath(spark, dir)
     val sketchBytes = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(merged, "sketch.bin"))
-    val indexFp = spark.read.parquet(s"$idx/fps")
-      .unionByName(spark.read.parquet(s"$merged/fps_delta"))
+    val indexFp = Tables.parquet(spark, s"$idx/fps")
+      .unionByName(Tables.parquet(spark, s"$merged/fps_delta"))
     val docs = Tables(spark, dir).documents.select("doc_id", "text", "source")
     val batchB = docs.filter(Scramble(col("doc_id")) % 8 === 4)
       .unionByName(docs.filter(Scramble(col("doc_id")) % 8 === 0)
@@ -1542,9 +1542,9 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, dir: String,
       forceBandSequential: Boolean): DataFrame = {
     val idx = lshIndexPath(spark, dir)
-    val baseBands = spark.read.parquet(s"$idx/bands")
+    val baseBands = Tables.parquet(spark, s"$idx/bands")
       .select(col("id").as("base_doc"), col("band"), col("key"))
-    val baseArrays = spark.read.parquet(s"$idx/arrays")
+    val baseArrays = Tables.parquet(spark, s"$idx/arrays")
     val (_, batch) =
       baseBatchSplit(spark, dir, perturb = true, dense = true)
     val batchArrays = batch

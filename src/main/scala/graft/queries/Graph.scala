@@ -142,7 +142,7 @@ object Graph {
   private def bucketedEdgeTable(
       spark: org.apache.spark.sql.SparkSession, layout: String): DataFrame = {
     val loc = s"$layout/edges"
-    val cols = spark.read.parquet(loc).schema.fields
+    val cols = Tables.parquet(spark, loc).schema.fields
       .map(f => s"${f.name} ${f.dataType.catalogString}").mkString(", ")
     // name carries layout hash + PID + nanoTime: PID alone collides when
     // two THREADS of one JVM run this concurrently — one thread's

@@ -650,7 +650,7 @@ object Joins {
     def bucketedTable(sub: String,
         keyCol: String): org.apache.spark.sql.DataFrame = {
       val loc = s"$layout/$sub"
-      val cols = spark.read.parquet(loc).schema.fields
+      val cols = Tables.parquet(spark, loc).schema.fields
         .map(f => s"${f.name} ${f.dataType.catalogString}").mkString(", ")
       val tName = s"graft_jb_${sub}_${loc.hashCode.toHexString}_" +
         s"${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"

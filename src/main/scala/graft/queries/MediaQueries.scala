@@ -588,7 +588,7 @@ object MediaQueries {
   ) { (spark, dir) =>
     import spark.implicits._
     val path = Media.jpegMediaPath(spark, dir)
-    spark.read.parquet(s"$path/containers").as[(Long, Array[Byte])]
+    graft.Tables.parquet(spark, s"$path/containers").as[(Long, Array[Byte])]
       .mapPartitions { it =>
         it.flatMap { case (id, payload) =>
           Media.decodeImage(payload).map { case (w, h, px) =>

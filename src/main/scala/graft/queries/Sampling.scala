@@ -529,8 +529,7 @@ object Sampling {
           .mkString(" UNION ALL\n")})
        |SELECT rn, vec_id, gap FROM u ORDER BY rn""".stripMargin,
   ) { (spark, dir) =>
-    val lists = spark.read
-      .parquet(s"${Similarity.ivfIndexPath(spark, dir)}/lists")
+    val lists = Tables.parquet(spark, s"${Similarity.ivfIndexPath(spark, dir)}/lists")
       .select(col("vec_id"), col("embedding"))
     val sel = kCenterGreedy(lists, 8)
     import spark.implicits._

@@ -704,8 +704,8 @@ object Similarity {
   val qSimIvfIncremental: QueryDef = QueryDef.oracle(
     "q_sim_ivf_incremental", ivfAnnOracleSql) { (spark, dir) =>
     val idx = ivfIndexPath(spark, dir)
-    val cents = spark.read.parquet(s"$idx/centroids")
-    val lists = spark.read.parquet(s"$idx/lists")
+    val cents = Tables.parquet(spark, s"$idx/centroids")
+    val lists = Tables.parquet(spark, s"$idx/lists")
     val n = graft.Tables(spark, dir).embeddings
       .select(col("vec_id"), col("embedding"))
     ivfTopk(lists, cents, n)
@@ -767,7 +767,7 @@ object Similarity {
   private[graft] def ivfMergeAssignments(
       spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame = {
     val baseIdx = ivfBaseIndexPath(spark, dir)
-    val cents = spark.read.parquet(s"$baseIdx/centroids")
+    val cents = Tables.parquet(spark, s"$baseIdx/centroids")
     val batch = graft.Tables(spark, dir).embeddings
       .select(col("vec_id"), col("embedding"))
       .filter(Scramble(col("vec_id")) % 4 === 0)
@@ -834,9 +834,9 @@ object Similarity {
     "q_sim_ivf_merge", ivfMergeOracleSql) { (spark, dir) =>
     val baseIdx = ivfBaseIndexPath(spark, dir)
     val delta = ivfMergeDeltaPath(spark, dir)
-    val cents = spark.read.parquet(s"$baseIdx/centroids")
-    val lists = spark.read.parquet(s"$baseIdx/lists")
-      .unionByName(spark.read.parquet(delta))
+    val cents = Tables.parquet(spark, s"$baseIdx/centroids")
+    val lists = Tables.parquet(spark, s"$baseIdx/lists")
+      .unionByName(Tables.parquet(spark, delta))
     val n = graft.Tables(spark, dir).embeddings
       .select(col("vec_id"), col("embedding"))
     ivfTopk(lists, cents, n)
@@ -876,14 +876,14 @@ object Similarity {
   val qStreamIvfIngest: QueryDef = QueryDef.oracle(
     "q_stream_ivf_ingest", ivfMergeOracleSql) { (spark, dir) =>
     val baseIdx = ivfBaseIndexPath(spark, dir)
-    val cents = spark.read.parquet(s"$baseIdx/centroids")
+    val cents = Tables.parquet(spark, s"$baseIdx/centroids")
     val stream = graft.streaming.EventsStream
       .readTable(spark, dir, "embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .filter(Scramble(col("vec_id")) % 4 === 0)
     val delta = graft.streaming.EventsStream
       .runAggregated(spark, stream, "append")(ivfIngestBatch(cents))
-    val lists = spark.read.parquet(s"$baseIdx/lists").unionByName(delta)
+    val lists = Tables.parquet(spark, s"$baseIdx/lists").unionByName(delta)
     val n = graft.Tables(spark, dir).embeddings
       .select(col("vec_id"), col("embedding"))
     ivfTopk(lists, cents, n)
@@ -1049,7 +1049,7 @@ object Similarity {
     graft.Staging.buildOnce(
         java.nio.file.Paths.get(base + ".jl"),
         "_INDEX_READY") { tmp =>
-      spark.read.parquet(s"$base/lists")
+      Tables.parquet(spark, s"$base/lists")
         .select(col("cluster"), col("vec_id"),
           jlProjected(col("embedding")).as("pemb"))
         .repartitionByRange(16, col("cluster"))
@@ -1111,8 +1111,8 @@ object Similarity {
   ) { (spark, dir) =>
     import graft.functions.GraftFunctions.cosineSim
     val idx = ivfIndexPath(spark, dir)
-    val cents = spark.read.parquet(s"$idx/centroids")
-    val plists = spark.read.parquet(s"${ivfJlIndexPath(spark, dir)}/plists")
+    val cents = Tables.parquet(spark, s"$idx/centroids")
+    val plists = Tables.parquet(spark, s"${ivfJlIndexPath(spark, dir)}/plists")
     val n = Tables(spark, dir).embeddings
       .select(col("vec_id"), col("embedding"))
     // query side: rank the broadcast quantizer, project the 8 query
@@ -2177,8 +2177,7 @@ object Similarity {
        |    WHERE r.vec_id = k.n_id AND r.n_id = k.vec_id) AS mutual
        |FROM knn k WHERE k.vec_id < 48 ORDER BY vec_id, rn""".stripMargin,
   ) { (spark, dir) =>
-    val lists = spark.read
-      .parquet(s"${ivfIndexPath(spark, dir)}/lists")
+    val lists = Tables.parquet(spark, s"${ivfIndexPath(spark, dir)}/lists")
       .select(col("cluster"), col("vec_id"), col("embedding"))
     val knn = knnEdges(lists, 3)
     // reverse edges that could flag a slice row: target inside the
@@ -2289,8 +2288,7 @@ object Similarity {
        |FROM a2 v LEFT JOIN l3 l ON v.vec_id = l.node
        |GROUP BY 1 ORDER BY 1""".stripMargin,
   ) { (spark, dir) =>
-    val lists = spark.read
-      .parquet(s"${ivfIndexPath(spark, dir)}/lists")
+    val lists = Tables.parquet(spark, s"${ivfIndexPath(spark, dir)}/lists")
       .select(col("cluster"), col("vec_id"), col("embedding"))
     val knn = knnEdges(lists, 3)
       .select(col("vec_id").as("src"), col("n_id").as("dst"))

@@ -103,7 +103,7 @@ object SourceQueries {
       |GROUP BY 1 ORDER BY 1""".stripMargin,
   ) { (spark, dir) =>
     val t = Tables(spark, dir)
-    val fact = spark.read.parquet(stage(spark, dir, "orders_part", "parquet",
+    val fact = Tables.parquet(spark, stage(spark, dir, "orders_part", "parquet",
       t.orders.withColumn("o_month",
         date_format(col("o_orderdate"), "yyyy-MM")),
       partitionCols = Seq("o_month")))
@@ -180,7 +180,7 @@ object SourceQueries {
       |  AND o_orderdate < TIMESTAMP '1997-01-01'
       |GROUP BY 1 ORDER BY 1""".stripMargin,
   ) { (spark, dir) =>
-    val laid = spark.read.parquet(zorderedOrdersPath(spark, dir))
+    val laid = Tables.parquet(spark, zorderedOrdersPath(spark, dir))
     laid
       .filter(col("o_custkey").between(20, 60)
         && col("o_orderdate") >= lit("1996-01-01").cast("timestamp")
@@ -253,7 +253,7 @@ object SourceQueries {
       |  MIN(md5(text)) AS min_md5, MAX(md5(text)) AS max_md5
       |FROM documents GROUP BY 1 ORDER BY 1""".stripMargin,
   ) { (spark, dir) =>
-    spark.read.parquet(compactedDocsPath(spark, dir))
+    Tables.parquet(spark, compactedDocsPath(spark, dir))
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_chars")).cast("long").as("chars"),
@@ -285,7 +285,7 @@ object SourceQueries {
       val bytes = parquetBytes(frag)
       val target = 128L << 20
       val nFiles = math.max(1L, (bytes + target - 1) / target).toInt
-      spark.read.parquet(frag)
+      Tables.parquet(spark, frag)
         .repartitionByRange(nFiles, col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(tmp.toString)

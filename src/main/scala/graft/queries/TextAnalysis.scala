@@ -1005,8 +1005,8 @@ object TextAnalysis {
       |FROM sc GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
   ) { (spark, dir) =>
     val model = nbModelPath(spark, dir)
-    val weights = spark.read.parquet(s"$model/weights")
-    val meta = spark.read.parquet(s"$model/meta")
+    val weights = Tables.parquet(spark, s"$model/weights")
+    val meta = Tables.parquet(spark, s"$model/meta")
     nbLogit(nbLabeled(spark, dir), weights, meta)
       .select(col("lang"), col("pos").as("teacher_en"),
         (col("logit") >= 0).as("pred_en"), col("logit"))

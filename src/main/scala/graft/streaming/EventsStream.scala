@@ -1,6 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -36,21 +35,6 @@ object EventsStream {
 
   private val n = new AtomicInteger(0)
 
-  /** Footer schema per table path with the (size, mtime) it was read
-    * at: read once per version of the table, not per query. A file
-    * rewritten in place, or a table directory written anew, changes its
-    * stamp and is read again. */
-  private val schemas = new ConcurrentHashMap[String, (Long, Long, StructType)]()
-
-  private def schemaOf(spark: SparkSession, path: String): StructType = {
-    val p = java.nio.file.Paths.get(path)
-    val size = java.nio.file.Files.size(p)
-    val mtime = java.nio.file.Files.getLastModifiedTime(p).toMillis
-    schemas.compute(path, (_, old) =>
-      if (old != null && old._1 == size && old._2 == mtime) old
-      else (size, mtime, spark.read.parquet(path).schema))._3
-  }
-
   /** The events table as an unbounded source (single-file glob → one
     * micro-batch at test scale; a directory of files at production scale,
     * rate-limited by maxFilesPerTrigger). Nanos→µs as in Tables.events. */
@@ -68,7 +52,8 @@ object EventsStream {
       file: String): DataFrame = {
     val base = file.stripSuffix(".parquet")
     val path = s"$dir/$file"
-    val schema = schemaOf(spark, path)
+    // the batch reader's memo: inferred once per version of the table
+    val schema = graft.Tables.parquet(spark, path).schema
     // the file source wants a directory of FILES; stage one containing
     // symlinks to the (read-only) events data. A single-file table gets
     // one symlink; a Spark-written table (a DIRECTORY of part files —
@@ -294,19 +279,19 @@ object EventsStream {
     * join/session stream": executors write partials, a final reduce folds
     * them.
     *
-    * A schema-only (zero-row) partial file is written BEFORE the query
-    * starts, so a stream that produces no batches still yields a readable
-    * empty result instead of a schema-inference failure; the staging
-    * directory is deleted on JVM exit (consumers read it lazily, so
-    * deletion can't happen any earlier than that). */
+    * The partials are read back with the schema `perBatch` gives an
+    * empty batch (the file source makes every field nullable, as
+    * inference does), not by inference: no footer-reading job per run,
+    * and a stream that produces no batches yields an empty result of
+    * that schema. The staging directory is deleted on JVM exit (consumers
+    * read it lazily, so deletion can't happen any earlier than that). */
   def runAggregated(spark: SparkSession, df: DataFrame, mode: String)(
       perBatch: DataFrame => DataFrame): DataFrame = {
     val id = n.incrementAndGet()
     val out = java.nio.file.Files.createTempDirectory(s"graft_stream_agg_${id}_")
     deleteOnExit(out)
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)
-    perBatch(empty).write.mode("append").parquet(out.toString)
+    val schema = perBatch(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)).schema
     graft.Graft.withConf(spark,
         "spark.sql.shuffle.partitions" -> stateWidth(spark, df).toString) {
       val ckpt = ephemeralCheckpoint(s"agg_$id")
@@ -321,7 +306,7 @@ object EventsStream {
       q.awaitTermination()
       deleteNow(ckpt)
     }
-    spark.read.parquet(out.toString)
+    spark.read.schema(schema).parquet(out.toString)
   }
 
   /** Registered paths are recursively deleted by ONE static shutdown

@@ -9,7 +9,9 @@ package graft.tools
   * sampled from a SparkListener. The r17 q_embed_project warm>cold
   * inversion showed +700 s of process CPU with JIT/GC/ext all quiet:
   * only a per-rep spill/shuffle readout can split "same plan, more
-  * spill" from "different plan".
+  * spill" from "different plan". `jobs=` counts the Spark jobs a rep
+  * started (building the query included, e.g. a parquet schema
+  * inference), the per-query job count ROADMAP direction 2 budgets.
   * Usage: runMain graft.tools.QTime <sfDir> <reps> [names...] */
 object QTime {
   def main(args: Array[String]): Unit = {
@@ -25,43 +27,25 @@ object QTime {
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSet
 
-    // cumulative executor-side counters (listener delivery is async —
-    // drained DETERMINISTICALLY via listenerBus.waitUntilEmpty through
-    // reflection before each snapshot; falls back to a 300 ms sleep if
-    // the private[spark] accessor ever disappears — in that mode, under
-    // heavy stages, task-end events can land after the snapshot and
-    // bleed counters into the next rep's deltas)
-    def drainListenerBus(): Unit = {
-      try {
-        val sc = spark.sparkContext
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        val wait = bus.getClass.getMethods.find(m =>
-          m.getName == "waitUntilEmpty" && m.getParameterCount == 1 &&
-            m.getParameterTypes()(0) == java.lang.Long.TYPE)
-        wait match {
-          case Some(m) => m.invoke(bus, java.lang.Long.valueOf(5000L)); ()
-          case None => Thread.sleep(300)
-        }
-      } catch {
-        // NonFatal only: swallowing OOM/fatal errors (or an interrupt,
-        // without restoring the flag) into a 300 ms sleep hid them —
-        // the round-19 advice nit
-        case _: InterruptedException =>
-          Thread.currentThread().interrupt()
-        case scala.util.control.NonFatal(_) => Thread.sleep(300)
-      }
-    }
+    // cumulative executor-side counters, drained before each snapshot
+    // (listener delivery is async — see Forensics.drainListenerBus)
+    def drainListenerBus(): Unit =
+      graft.Forensics.drainListenerBus(spark.sparkContext)
     val memSpill = new java.util.concurrent.atomic.AtomicLong(0)
     val diskSpill = new java.util.concurrent.atomic.AtomicLong(0)
     val shufWrite = new java.util.concurrent.atomic.AtomicLong(0)
     val shufRecs = new java.util.concurrent.atomic.AtomicLong(0)
     val shufRead = new java.util.concurrent.atomic.AtomicLong(0)
     val nTasks = new java.util.concurrent.atomic.AtomicLong(0)
+    val nJobs = new java.util.concurrent.atomic.AtomicLong(0)
     // GRAFT_QTIME_STAGES=1: per-stage wall/CPU lines — names WHICH
     // stage balloons when a rep's total CPU swings on identical work
     val stageLog = sys.env.contains("GRAFT_QTIME_STAGES")
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          nJobs.incrementAndGet()
         override def onStageCompleted(
             e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
           if (stageLog) {
@@ -102,8 +86,9 @@ object QTime {
         (1 to reps).foreach { rep =>
           // settle async listener traffic from the previous rep
           drainListenerBus()
-          val (ms0, ds0, sw0, sr0, tk0, rc0) = (memSpill.get, diskSpill.get,
-            shufWrite.get, shufRead.get, nTasks.get, shufRecs.get)
+          val (ms0, ds0, sw0, sr0, tk0, rc0, jb0) = (memSpill.get,
+            diskSpill.get, shufWrite.get, shufRead.get, nTasks.get,
+            shufRecs.get, nJobs.get)
           val c0 = procCpu; val g0 = gcMs
           val j0 = graft.Forensics.jitMillis
           val cg0 = graft.Forensics.codegenCompileCount
@@ -133,7 +118,7 @@ object QTime {
             f"shufWrMB=${mb(shufWrite.get - sw0)}%9.1f " +
             f"shufRecs=${shufRecs.get - rc0}%10d " +
             f"shufRdMB=${mb(shufRead.get - sr0)}%9.1f " +
-            f"tasks=${nTasks.get - tk0}%5d")
+            f"tasks=${nTasks.get - tk0}%5d jobs=${nJobs.get - jb0}%4d")
         }
       }
     spark.stop()

@@ -71,11 +71,11 @@ class SourcesSpec extends SparkSpec {
     // not be memoized (a corpus appearing later re-estimates fresh).
     val key = s"$tmp/split_memo_probe_${System.nanoTime()}"
     intercept[java.io.FileNotFoundException] {
-      Tables.splitEstimate(key, () => throw new java.io.FileNotFoundException(key))
+      Tables.splitEstimate(spark, key, () => throw new java.io.FileNotFoundException(key))
     }
-    assert(Tables.splitEstimate(key, () => 7L) == 7L,
+    assert(Tables.splitEstimate(spark, key, () => 7L) == 7L,
       "a failed probe must not poison the memo")
-    assert(Tables.splitEstimate(key, () => 99L) == 7L,
+    assert(Tables.splitEstimate(spark, key, () => 99L) == 7L,
       "the estimate must be memoized per path")
   }
 

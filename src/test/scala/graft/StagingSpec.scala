@@ -33,7 +33,7 @@ class StagingSpec extends AnyFunSuite {
     val f = tmpDir("split_memo").resolve("documents.parquet")
     Files.write(f, Array.fill[Byte](100)(1))
     var runs = 0
-    def estimate(): Long = Tables.splitEstimate(f.toString,
+    def estimate(): Long = Tables.splitEstimate(TestSpark.spark, f.toString,
       () => { runs += 1; runs.toLong })
     assert(estimate() == 1L)
     assert(estimate() == 1L && runs == 1, "unchanged file must hit the memo")

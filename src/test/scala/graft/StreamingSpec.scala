@@ -412,6 +412,86 @@ class StreamingSpec extends SparkSpec {
     graft.Staging.deleteRecursively(dir)
   }
 
+  test("readTable reads the schema again after a part of a directory table is rewritten in place") {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    val dir = Files.createTempDirectory("graft_dirtable_")
+    val table = dir.resolve("t.parquet") // a directory of parts, as ScaleGen writes
+    spark.range(3).toDF("id").coalesce(1).write.parquet(table.toString)
+    def read = graft.streaming.EventsStream.readTable(spark, dir.toString, "t.parquet")
+    assert(read.columns.toSeq == Seq("id"))
+    val part = Files.list(table).iterator().asScala
+      .find(_.getFileName.toString.startsWith("part-")).get
+    val stamp = Files.getLastModifiedTime(table)
+    val wider = Files.createTempDirectory("graft_pq_")
+    writeParquetFile(spark.range(3).toDF("id").withColumn("extra", col("id") * 2),
+      wider.resolve("p.parquet"))
+    // same name, new bytes: the directory's own size and mtime stay put
+    Files.write(part, Files.readAllBytes(wider.resolve("p.parquet")))
+    Files.deleteIfExists(part.resolveSibling(s".${part.getFileName}.crc"))
+    Files.setLastModifiedTime(table, stamp)
+    val again = read
+    assert(again.columns.toSeq == Seq("id", "extra"),
+      "a part rewritten in place kept the old schema")
+    val total = graft.streaming.EventsStream.runToTable(spark,
+      again.agg(sum("extra").as("s")), "complete").head().getLong(0)
+    assert(total == 6L)
+    graft.Staging.deleteRecursively(wider)
+    graft.Staging.deleteRecursively(dir)
+  }
+
+  /** The (root path, schema) of every runAggregated partials scan in `df`. */
+  private def partialScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[(String, org.apache.spark.sql.types.StructType)] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.rootPaths.map(_.toString)
+          .filter(_.contains("graft_stream_agg_")).map(_ -> l.schema)
+        case _ => Nil
+      }
+    }.flatten
+  }
+
+  test("runAggregated reads its partials with the schema inference gives them") {
+    import org.apache.spark.sql.types._
+    val stream = graft.streaming.EventsStream.readTable(spark, sf, "nation.parquet")
+    // non-null counts, an array of structs and a map: every nullability
+    // a parquet read turns on
+    val out = graft.streaming.EventsStream.runAggregated(spark, stream, "append") {
+      _.groupBy("n_regionkey").agg(count(lit(1)).as("n"),
+        collect_list(struct(col("n_nationkey"), lit(1).as("one"))).as("l"),
+        map(lit("n"), count(lit(1))).as("m"))
+    }
+    val Seq((root, schema)) = partialScans(out)
+    assert(schema == spark.read.parquet(root).schema)
+    assert(out.orderBy("n_regionkey").collect().toSeq ==
+      spark.read.parquet(root).orderBy("n_regionkey").collect().toSeq)
+    assert(out.agg(sum("n")).head().getLong(0) == 25L)
+    // a stream that runs no batch yields an empty result of that schema
+    val empty = java.nio.file.Files.createTempDirectory("graft_empty_src_")
+    val none = graft.streaming.EventsStream.runAggregated(spark,
+      spark.readStream.schema(new StructType().add("k", LongType))
+        .parquet(empty.toString), "append")(_.groupBy("k").agg(count(lit(1)).as("n")))
+    assert(none.count() == 0L)
+    assert(none.schema == new StructType().add("k", LongType).add("n", LongType))
+    graft.Staging.deleteRecursively(empty)
+  }
+
+  test("the six runAggregated queries read partials with the schema inference gives them") {
+    Seq("q_stream_session", "q_stream_stateful", "q_stream_join",
+        "q_stream_join_outer", "q_stream_sketch", "q_stream_ivf_ingest").foreach { name =>
+      val q = graft.queries.Registry.all.find(_.name == name).get
+      val df = q.run(spark, sf)
+      val scans = partialScans(df)
+      assert(scans.nonEmpty, s"$name: no runAggregated partials in its plan")
+      scans.foreach { case (root, schema) =>
+        assert(schema == spark.read.parquet(root).schema, s"$name: $root")
+      }
+      assert(df.count() > 0, s"$name returned no rows")
+    }
+  }
+
   test("streaming sessionization equals the batch twin on the watermark-closed domain") {
     // q_stream_session and q_win_sessionize are documented as the SAME
     // operator (session_window, 6 h gap) run live vs as a backfill; this
