@@ -21,4 +21,18 @@ object TestSpark {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
+
+  /** `rows` as the single parquet file `file`, replacing any file there. */
+  protected def writeParquetFile(rows: org.apache.spark.sql.DataFrame,
+      file: java.nio.file.Path): Unit = {
+    import java.nio.file.{Files, StandardCopyOption}
+    val tmp = Files.createTempDirectory("graft_pq_")
+    rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val ls = Files.list(tmp)
+    val one = try ls.filter(_.getFileName.toString.endsWith(".parquet"))
+      .findFirst().get() finally ls.close()
+    Files.createDirectories(file.getParent)
+    Files.move(one, file, StandardCopyOption.REPLACE_EXISTING)
+    graft.Staging.deleteRecursively(tmp)
+  }
 }

@@ -369,20 +369,6 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
-  /** `rows` as the single parquet file `file`, replacing any file there. */
-  private def writeParquetFile(rows: org.apache.spark.sql.DataFrame,
-      file: java.nio.file.Path): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    val tmp = Files.createTempDirectory("graft_pq_")
-    rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val ls = Files.list(tmp)
-    val one = try ls.filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get() finally ls.close()
-    Files.createDirectories(file.getParent)
-    Files.move(one, file, StandardCopyOption.REPLACE_EXISTING)
-    graft.Staging.deleteRecursively(tmp)
-  }
-
   test("readTable keeps apart sf dirs whose paths share a String.hashCode") {
     import java.nio.file.Files
     val root = Files.createTempDirectory("graft_links_")

@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, DataFrame}
+import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 
@@ -35,18 +35,6 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
     } finally sc.removeSparkListener(listener)
   }
 
-  /** `df` written as ONE parquet file at `to` (replacing its bytes in
-    * place when it exists: same name, no new directory entry). */
-  private def writeSingleFile(df: DataFrame, to: Path): Unit = {
-    val staging = Files.createTempDirectory(tmp, "w")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.resolve("t").toString)
-    val part = Files.list(staging.resolve("t"))
-    val file = try part.filter(_.getFileName.toString.endsWith(".parquet"))
-      .findFirst().get() finally part.close()
-    Files.write(to, Files.readAllBytes(file))
-    Staging.deleteRecursively(staging)
-  }
-
   private def twoCols = spark.range(20).select(col("id"), (col("id") * 2).as("x"))
 
   test("a second read of an unchanged table runs no Spark job; the first runs one") {
@@ -73,9 +61,9 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
 
   test("a single file rewritten in place with an extra column is inferred again") {
     val f = tmp.resolve("single.parquet")
-    writeSingleFile(twoCols, f)
+    writeParquetFile(twoCols, f)
     assert(Tables.parquet(spark, f.toString).columns.toSeq == Seq("id", "x"))
-    writeSingleFile(twoCols.withColumn("y", col("id") + 1), f)
+    writeParquetFile(twoCols.withColumn("y", col("id") + 1), f)
     val again = Tables.parquet(spark, f.toString)
     assert(again.columns.toSeq == Seq("id", "x", "y"),
       "an in-place rewrite kept the old schema")
