@@ -2,92 +2,96 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
-/** Content-addressed /tmp staging for write-once derived artifacts
-  * (bucketed copies, dedup indexes, sketch tables, format conversions).
+import org.apache.spark.sql.SparkSession
+
+/** Content-addressed staging for write-once derived artifacts (bucketed
+  * copies, dedup indexes, sketch tables, format conversions), and the
+  * one rule that says which version of an input is which.
   *
-  * Keying the staged path on `dir.hashCode` (rounds 1–9) had two failure
-  * modes the round-10 advice flagged: regenerating testdata IN PLACE
-  * (which round 10's driver demonstrably did for `events.ts`) silently
-  * reuses a stale artifact because the path string didn't change, and
-  * `String.hashCode` collisions across different dirs are possible. Both
-  * die with a content fingerprint: the staged path embeds a digest of the
-  * source directory's file listing (relative path, size, mtime of every
-  * file), so regenerated inputs land in a FRESH staged path and two dirs
-  * can only share an artifact by having byte-dated-identical listings.
-  * Stale artifacts from older fingerprints are simply never read again
-  * (tmp reaper territory — nothing consults them).
-  *
-  * The walk reads metadata plus an 8 KB content probe per file (first and
-  * last 4 KB — parquet's header and footer, which change whenever the
-  * file is rewritten with different row groups, stats, or data). The
-  * probe closes the round-11 advice gap: (path, size, mtime) alone can
-  * collide when a regeneration rewrites same-sized files within the
-  * filesystem's mtime granularity (some filesystems truncate to whole
-  * seconds). Still milliseconds against the write it guards — an sf dir
-  * is a handful of tables, a few hundred part files at most — so it runs
-  * fresh on every lookup (a cache would defeat the point).
+  * Input identity ([[listing]]). One recursive listing of an input, a
+  * file or a directory tree, through Hadoop `FileSystem` (so any
+  * filesystem Spark reads works) yields a version digest, the number of
+  * data files and their byte total. The digest covers the qualified
+  * root path and then, for every data file in name order, its path
+  * relative to the root, its size, its mtime, and its first, middle and
+  * last 4 KB. Names starting with `_` or `.` are skipped at every level,
+  * as Spark skips them (`_SUCCESS`, `.crc`). The probes are there
+  * because size and mtime alone miss a same-size rewrite inside the
+  * filesystem's mtime granularity (some truncate to whole seconds):
+  * parquet's header and footer change with any new data, row groups,
+  * stats or schema, and the middle probe samples the data pages between
+  * them in files over 8 KB. Every reuse of derived state keys on this
+  * one digest: a staged artifact's path ([[path]]), a parquet input's
+  * memoized schema (`Tables.parquet`), the link farm of a streamed table
+  * (`EventsStream.readTable`) and the similarity guards' cached
+  * verdicts; the dense-scan guard reads its file count and bytes. An
+  * input rewritten in place gets a new version, so nothing derived from
+  * its old bytes is served again, and two inputs share an artifact only
+  * by sharing path, listing and probed bytes.
   */
 object Staging {
 
-  /** Digest of the source dir's recursive (path, size, mtime) listing
-    * plus a first/middle/last-4 KB content probe of every regular file. */
-  private[graft] def fingerprint(srcDir: String): String = {
-    val root = Paths.get(srcDir).toAbsolutePath.normalize
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.update(root.toString.getBytes("UTF-8"))
-    if (Files.isDirectory(root)) {
-      import scala.jdk.CollectionConverters._
-      val walk = Files.walk(root)
-      try walk.iterator().asScala.toArray.sortBy(_.toString).foreach {
-        (f: Path) =>
-          md.update(('|' + root.relativize(f).toString).getBytes("UTF-8"))
-          if (Files.isRegularFile(f)) {
-            val size = Files.size(f)
-            md.update((":" + size + ":" +
-              Files.getLastModifiedTime(f).toMillis).getBytes("UTF-8"))
-            // read-FULLY loops (a single channel read may legally return
-            // short) so the digest is a pure function of the bytes; an
-            // unreadable file digests a marker instead of aborting every
-            // Staging.path caller — determinism over completeness for a
-            // cache key
-            def probe(pos: Long): Unit = {
-              val buf = java.nio.ByteBuffer.allocate(
-                math.min(4096L, size - pos).toInt)
-              val ch = java.nio.channels.FileChannel.open(f)
-              var eof = false
-              try {
-                var p = pos
-                while (!eof && buf.hasRemaining) {
-                  val n = ch.read(buf, p)
-                  if (n < 0) eof = true else p += n
-                }
-              } finally ch.close()
-              if (!eof) { buf.flip(); md.update(buf) }
-            }
-            try {
-              probe(0L)
-              // middle probe (round-20 advice): head+tail alone could in
-              // principle miss a same-size in-place rewrite of file
-              // MIDDLES (parquet data pages between an unchanged header
-              // and a rewritten-identical footer); sampling the center
-              // 4 KB closes that class without reading whole files —
-              // size+mtime still guard everything else. Past 8 KB the
-              // head and tail probes leave a gap between them; the middle
-              // probe samples it.
-              if (size > 8192) probe(size / 2)
-              if (size > 4096) probe(math.max(4096L, size - 4096))
-            } catch {
-              case _: java.io.IOException => md.update("!unreadable".getBytes)
-            }
-          }
-      } finally walk.close()
+  /** One listing of an input: its version digest, its data-file count
+    * and their byte total. */
+  final case class Listing(version: String, files: Int, bytes: Long)
+
+  /** The [[Listing]] of `path` under the session's Hadoop conf. A
+    * missing path lists as no files, under a version of its own. A file
+    * that cannot be read fully digests a marker instead of failing the
+    * caller: determinism over completeness for a cache key. */
+  private[graft] def listing(spark: SparkSession, path: String): Listing = {
+    import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, Path => HPath}
+    val p = new HPath(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // probes read the bytes themselves: a checksummed filesystem would
+    // also verify the `.crc` sidecar the listing skips
+    val raw = fs match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case o => o
     }
-    md.digest().take(8).map(b => f"$b%02x").mkString
+    val md = java.security.MessageDigest.getInstance("MD5")
+    md.update(fs.makeQualified(p).toString.getBytes("UTF-8"))
+    var files = 0
+    var bytes = 0L
+    def visit(st: FileStatus, rel: String): Unit =
+      if (st.isDirectory) fs.listStatus(st.getPath)
+        .filterNot { c =>
+          val n = c.getPath.getName
+          n.startsWith("_") || n.startsWith(".")
+        }
+        .sortBy(_.getPath.getName)
+        .foreach(c => visit(c, s"$rel/${c.getPath.getName}"))
+      else {
+        val size = st.getLen
+        files += 1
+        bytes += size
+        md.update(s"|$rel:$size:${st.getModificationTime}".getBytes("UTF-8"))
+        try {
+          val in = raw.open(st.getPath)
+          def probe(pos: Long): Unit = {
+            val buf = new Array[Byte](math.min(4096L, size - pos).toInt)
+            in.readFully(pos, buf)
+            md.update(buf)
+          }
+          try {
+            probe(0L)
+            if (size > 8192) probe(size / 2)
+            if (size > 4096) probe(math.max(4096L, size - 4096))
+          } finally in.close()
+        } catch {
+          case _: java.io.IOException => md.update("!unreadable".getBytes("UTF-8"))
+        }
+      }
+    val root =
+      try Some(fs.getFileStatus(p))
+      catch { case _: java.io.FileNotFoundException => None }
+    root.fold(md.update("!missing".getBytes("UTF-8")))(visit(_, ""))
+    Listing(md.digest().take(8).map(b => f"$b%02x").mkString, files, bytes)
   }
 
   /** Digest of the engine's compiled `graft/**/*.class` files, read from
     * `root` (a class directory or a jar) in name order: the PRODUCING
-    * CODE's identity. The data fingerprint covers the inputs, but a change
+    * CODE's identity. The input [[listing]] covers the inputs, but a change
     * to a builder's algebra (transcode rotation, centroid arithmetic, band
     * layout) would otherwise reuse the stale artifact under the same path
     * and surface as an oracle hash mismatch instead of a rebuild. Throws
@@ -123,10 +127,12 @@ object Staging {
     getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
 
   private[graft] def pathFor(code: String, prefix: String, srcDir: String): Path =
-    Paths.get(sys.props("java.io.tmpdir"), s"${prefix}_${code}_${fingerprint(srcDir)}")
+    Paths.get(sys.props("java.io.tmpdir"),
+      s"${prefix}_${code}_${listing(SparkSession.active, srcDir).version}")
 
   /** /tmp staging path for artifact `prefix` derived from `srcDir`:
-    * artifact identity = engine [[code]] digest × data fingerprint. */
+    * artifact identity = engine [[code]] digest × the input's version
+    * ([[listing]], under the active session's Hadoop conf). */
   def path(prefix: String, srcDir: String): Path = pathFor(code, prefix, srcDir)
 
   /** The signature before the code digest replaced the hand-kept version
@@ -136,15 +142,15 @@ object Staging {
   def path(prefix: String, srcDir: String, version: Int): Path =
     pathFor(code, prefix, srcDir)
 
-  /** Write-once build with ATOMIC publication (round-12 advice: the
-    * bare check-then-build let two JVMs sharing /tmp — a test suite and
-    * a bench run — interleave `mode("overwrite")` writes, with one
-    * reading a directory the other was mid-rewrite). `build` runs
-    * against a process-unique temp sibling; the finished tree is
-    * renamed into place in one filesystem operation, so readers only
-    * ever see absent-or-complete. Losing a publication race is benign:
-    * the build is deterministic (that's the staging contract), so the
-    * winner's bytes are ours — the loser just deletes its temp tree.
+  /** Write-once build with ATOMIC publication: two JVMs sharing /tmp (a
+    * test suite and a bench run) must never interleave
+    * `mode("overwrite")` writes, with one reading a directory the other
+    * is mid-rewrite. `build` runs against a process-unique temp sibling;
+    * the finished tree is renamed into place in one filesystem
+    * operation, so readers only ever see absent-or-complete. Losing a
+    * publication race is benign: the build is deterministic (that's the
+    * staging contract), so the winner's bytes are ours — the loser just
+    * deletes its temp tree.
     * Returns `out` with `marker` guaranteed present. */
   def buildOnce(out: Path, marker: String)(build: Path => Unit): Path = {
     if (Files.exists(out.resolve(marker))) return out

@@ -51,8 +51,7 @@ final class Tables(val spark: SparkSession, val dir: String) {
     * Repartition, and a real 100 TB corpus (many files / row groups)
     * takes the no-shuffle branch. Opt-in per call site (round 21): the
     * driver bench proved the guard helps ONLY the kernel-dense scans. */
-  def documentsDense: DataFrame =
-    computeDense(t("documents"), "documents", "doc_id")
+  def documentsDense: DataFrame = computeDense("documents", "doc_id")
 
   /** Alias kept for the consumer whose RESULT is the plan itself
     * (q_plan_display): its oracle pins the displayed operator chain,
@@ -75,17 +74,21 @@ final class Tables(val spark: SparkSession, val dir: String) {
     * are partition-independent (per-row expressions, key-partitioned
     * aggregates, deterministic ORDER BY), and Catalyst pushes filters
     * through Repartition so scan pruning is unchanged. */
-  def embeddings: DataFrame =
-    computeDense(t("embeddings"), "embeddings", "vec_id")
+  def embeddings: DataFrame = computeDense("embeddings", "vec_id")
 
   /** The guard behind [[embeddings]]/[[documentsDense]]: when the
-    * corpus file's REAL split count (row groups, not planner
-    * byte-splits) would leave most of the machine idle, hash-spread the
-    * rows across the session's cores — a one-off shuffle of the raw
-    * rows, trivially cheaper than the per-row kernel folds it
-    * parallelizes. */
-  private def computeDense(raw: DataFrame, name: String,
-      key: String): DataFrame = {
+    * corpus's REAL split count (row groups, not planner byte-splits)
+    * would leave most of the machine idle, hash-spread the rows across
+    * the session's cores — a one-off shuffle of the raw rows, trivially
+    * cheaper than the per-row kernel folds it parallelizes. One listing
+    * of the corpus ([[Staging.listing]]) keys the schema read and gives
+    * the split count, so each dense read lists the corpus once. */
+  private def computeDense(name: String, key: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val listing = Staging.listing(spark, path)
+    // a missing corpus raises the canonical AnalysisException here,
+    // from the read itself
+    val raw = Tables.parquet(spark, path, listing)
     val par = spark.sparkContext.defaultParallelism
     // Splittability floor = real row groups, not planner byte-splits:
     // the FileScan happily "splits" a one-row-group file into 27 byte
@@ -93,27 +96,8 @@ final class Tables(val spark: SparkSession, val dir: String) {
     // a row group) — counting those hides the problem the guard exists
     // to catch. Estimate actual splits as max(files, bytes / 128 MB —
     // the standard row-group target); a corpus of big multi-row-group
-    // files or many files takes the no-shuffle branch. The estimate is
-    // MEMOIZED per corpus file version ([[Tables.fileVersion]], the same
-    // listing the schema memo keys on) for the JVM (round-20 advice).
-    // A missing/unreadable corpus file estimates as "already splittable"
-    // (round-20 advice): the guard then returns the raw frame, whose own
-    // scan raises the canonical AnalysisException — the probe must never
-    // turn a missing table into an accessor-time FileNotFoundException.
-    // (The failure is NOT memoized: a probe error answers this call
-    // only, so a corpus that appears later re-estimates fresh.)
-    val splits = try Tables.splitEstimate(spark, s"$dir/$name.parquet", () => {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-      val st = fs.getFileStatus(p)
-      val (files, bytes) =
-        if (st.isDirectory) {
-          val parts = fs.listStatus(p)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-          (parts.length.max(1), parts.map(_.getLen).sum)
-        } else (1, st.getLen)
-      math.max(files.toLong, bytes / (128L << 20))
-    }) catch { case _: java.io.IOException => Long.MaxValue }
+    // files or many files takes the no-shuffle branch.
+    val splits = math.max(listing.files.toLong, listing.bytes / (128L << 20))
     // HASH-repartition on the unique row key, not round-robin (round
     // 20): a keyless repartition(n) pays sortBeforeRepartition — a
     // local sort of the FULL rows (multi-KB text) on every read, per
@@ -137,34 +121,38 @@ object Tables {
     * inference is a Spark job that reads a footer: one job per read, on
     * every query that reads the table, even when the file has not
     * changed since the last query. This reader keeps the inferred schema
-    * per path, under a key of two parts: the path's [[fileVersion]] and
-    * the session's parquet-reading confs ([[readConfs]]). While the key
-    * holds, the read is `spark.read.schema(memo).parquet(path)`, which
-    * lists the files but starts no job; when it changes, the schema is
-    * inferred again exactly as a plain read infers it.
+    * per path, under a key of two parts: the input's version
+    * ([[Staging.listing]]: path, size, mtime and content probes of every
+    * data file) and the session's parquet-reading confs ([[readConfs]]).
+    * While the key holds, the read is
+    * `spark.read.schema(memo).parquet(path)`, which lists the files but
+    * starts no job; when it changes, the schema is inferred again
+    * exactly as a plain read infers it.
     *
     * Only the schema is kept, never the DataFrame: a DataFrame carries
     * its relation's attribute ids, so two reads of one table sharing a
     * frame could no longer be told apart in a self-join. Outputs that
     * are new on every run (per-run partials, checkpoints) stay on plain
     * reads: their paths never repeat, so a memo entry would never be hit.
-    * A missing path is not memoized; the plain read raises Spark's own
+    * A missing path is never memoized: its inference raises Spark's own
     * `AnalysisException`. */
   def parquet(spark: SparkSession, path: String): DataFrame =
-    fileVersion(spark, path) match {
-      case None => spark.read.parquet(path)
-      case Some(v) =>
-        val key = s"$v|${readConfs(spark)}"
-        val hit = schemas.get(path)
-        val schema =
-          if (hit != null && hit._1 == key) hit._2
-          else {
-            val inferred = spark.read.parquet(path).schema
-            schemas.put(path, (key, inferred))
-            inferred
-          }
-        spark.read.schema(schema).parquet(path)
-    }
+    parquet(spark, path, Staging.listing(spark, path))
+
+  /** [[parquet]] under a listing of `path` the caller already made. */
+  private def parquet(spark: SparkSession, path: String,
+      listing: Staging.Listing): DataFrame = {
+    val key = s"${listing.version}|${readConfs(spark)}"
+    val hit = schemas.get(path)
+    val schema =
+      if (hit != null && hit._1 == key) hit._2
+      else {
+        val inferred = spark.read.parquet(path).schema
+        schemas.put(path, (key, inferred))
+        inferred
+      }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** [[parquet]]'s memo: path -> (key, inferred schema). One entry per
     * path; a new version replaces the old one. */
@@ -182,48 +170,6 @@ object Tables {
     (parquetConfs :+ ("spark.sql.caseSensitive" ->
       conf.caseSensitiveAnalysis.toString)).mkString(",")
   }
-
-  /** The version of a parquet input: a digest of the path, size and mtime
-    * of the file, or of every data file under a directory, listed
-    * recursively through Hadoop `FileSystem` (so any filesystem Spark
-    * reads works). Names starting with `_` or `.` are skipped, as Spark
-    * skips them (`_SUCCESS`, `.crc`). A part rewritten in place changes
-    * the version even though its directory's own stamp does not. `None`
-    * when the path does not exist. */
-  private[graft] def fileVersion(spark: SparkSession,
-      path: String): Option[String] = {
-    import org.apache.hadoop.fs.{FileStatus, Path}
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val root =
-      try fs.getFileStatus(p)
-      catch { case _: java.io.FileNotFoundException => return None }
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def visit(st: FileStatus): Unit =
-      if (!st.isDirectory)
-        md.update(s"${st.getPath}|${st.getLen}|${st.getModificationTime};"
-          .getBytes("UTF-8"))
-      else fs.listStatus(st.getPath)
-        .filterNot { c =>
-          val n = c.getPath.getName
-          n.startsWith("_") || n.startsWith(".")
-        }
-        .sortBy(_.getPath.getName).foreach(visit)
-    visit(root)
-    Some(md.digest().map(b => f"$b%02x").mkString)
-  }
-
-  /** JVM-wide memo of [[Tables.computeDense]]'s split estimate, keyed by
-    * the corpus path and its [[fileVersion]]: a corpus regenerated in
-    * place re-estimates instead of serving the old file's answer.
-    * Metadata only (a long per corpus), never row data. A missing path
-    * keys on the path alone. */
-  private val splitMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private[graft] def splitEstimate(spark: SparkSession, path: String,
-      est: () => Long): Long =
-    splitMemo.computeIfAbsent(s"$path|${fileVersion(spark, path).getOrElse("")}",
-      _ => java.lang.Long.valueOf(est())).longValue()
 
   /** events.ts across generator versions, normalized to one type.
     *

@@ -22,11 +22,11 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Cached prefilter-exactness verdicts, keyed by query family +
-    * corpus content fingerprint ([[graft.Staging.fingerprint]]): the
-    * guard's extra phase-1 scan runs once per dataset per JVM, and a
-    * regenerated corpus gets a fresh key (so a stale verdict can never
-    * outlive its data — the staged-artifact discipline). */
+  /** Cached prefilter-exactness verdicts, keyed by query family + the
+    * sf dir's version ([[graft.Staging.listing]]): the guard's extra
+    * phase-1 scan runs once per dataset per JVM, and a regenerated
+    * corpus gets a fresh key (so a stale verdict can never outlive its
+    * data — the staged-artifact discipline). */
   private val guardCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
 
@@ -209,11 +209,12 @@ object Similarity {
     // hence exact cos ≤ cut + 1e-12 < exact@5 — it cannot displace the
     // emitted ranking. On violation (a corpus packed with ~28+
     // near-identical vectors at the cut boundary) fall back to the
-    // all-exact single-phase scan. The verdict is cached per
-    // content-fingerprinted corpus (Staging.fingerprint — the staged-
-    // artifact key discipline), so a session pays the guard's extra
-    // phase-1 scan once per dataset, not per execution.
-    val ok = Similarity.guardVerdict("topk:" + graft.Staging.fingerprint(dir), {
+    // all-exact single-phase scan. The verdict is cached per corpus
+    // version (Staging.listing — the staged-artifact key), so a session
+    // pays the guard's extra phase-1 scan once per dataset, not per
+    // execution.
+    val ok = Similarity.guardVerdict(
+      "topk:" + graft.Staging.listing(spark, dir).version, {
       val candCk = candPipeline.localCheckpoint()
       val top5 = phase2(candCk).localCheckpoint()
       try {
@@ -668,14 +669,18 @@ object Similarity {
     * assignments derive from the WRITTEN centroids read back, so day-2
     * scoring sees exactly the float32 values the index stores. */
   private[graft] def ivfIndexPath(
-      spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    // buildOnce publishes atomically — two JVMs sharing /tmp can no
-    // longer interleave overwrite writes (round-12 advice)
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_ivf_index", dir),
-        "_INDEX_READY") { tmp =>
-      val n = graft.Tables(spark, dir).embeddings
-        .select(col("vec_id"), col("embedding"))
+      spark: org.apache.spark.sql.SparkSession, dir: String): String =
+    ivfIndex(spark, dir, "graft_ivf_index", identity)
+
+  /** The staged build behind [[ivfIndexPath]] and [[ivfBaseIndexPath]]:
+    * the quantizer trained on `slice` of the corpus, written beside the
+    * slice's inverted lists. buildOnce publishes atomically, so two JVMs
+    * sharing /tmp never interleave overwrite writes. */
+  private def ivfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
+      prefix: String, slice: DataFrame => DataFrame): String =
+    graft.Staging.buildOnce(graft.Staging.path(prefix, dir), "_INDEX_READY") { tmp =>
+      val n = slice(graft.Tables(spark, dir).embeddings
+        .select(col("vec_id"), col("embedding")))
       ivfCentroids(n).coalesce(1)
         .write.mode("overwrite").parquet(tmp.resolve("centroids").toString)
       val cents = spark.read.parquet(tmp.resolve("centroids").toString)
@@ -685,7 +690,6 @@ object Similarity {
         .sortWithinPartitions("cluster")
         .write.mode("overwrite").parquet(tmp.resolve("lists").toString)
     }.toString
-  }
 
   /** INCREMENTAL IVF ANN — the day-2 form of q_sim_ivf_ann and the
     * vector-search analog of q_dedup_incremental_indexed: the coarse
@@ -740,21 +744,8 @@ object Similarity {
     * fingerprint. */
   private[graft] def ivfBaseIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_ivf_base_index", dir),
-        "_INDEX_READY") { tmp =>
-      val base = graft.Tables(spark, dir).embeddings
-        .select(col("vec_id"), col("embedding"))
-        .filter(Scramble(col("vec_id")) % 4 =!= 0)
-      ivfCentroids(base).coalesce(1)
-        .write.mode("overwrite").parquet(tmp.resolve("centroids").toString)
-      val cents = spark.read.parquet(tmp.resolve("centroids").toString)
-      ivfNearest(base, cents, "cluster")
-        .select(col("cluster"), col("vec_id"), col("embedding"))
-        .repartitionByRange(16, col("cluster"))
-        .sortWithinPartitions("cluster")
-        .write.mode("overwrite").parquet(tmp.resolve("lists").toString)
-    }.toString
+    ivfIndex(spark, dir, "graft_ivf_base_index",
+      _.filter(Scramble(col("vec_id")) % 4 =!= 0))
 
   /** The nightly MERGE's data path, exposed for PlanSpec: the new-vector
     * batch (Scramble % 4 = 0) assigned against the FROZEN persisted
@@ -1288,7 +1279,7 @@ object Similarity {
     // per group (≤|groups| rows checked). On violation, score the whole
     // corpus exactly. Verdict cached per corpus fingerprint.
     val ok = Similarity.guardVerdict(
-      "outliers:" + graft.Staging.fingerprint(dir), {
+      "outliers:" + graft.Staging.listing(spark, dir).version, {
         val candCk = candPipeline.localCheckpoint()
         val b3 = bottom3(candCk.select(col("vec_id"))).localCheckpoint()
         try {

@@ -5,7 +5,6 @@ import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.StructType
 
 /** Structured-Streaming plumbing for the judged streaming queries.
   *
@@ -42,78 +41,45 @@ object EventsStream {
     graft.Tables.normalizeTs(readTable(spark, dir, "events.parquet"))
 
   /** Any corpus parquet table as an unbounded file-source stream — the
-    * events machinery generalized (same symlink staging, same
-    * single-file vs part-directory handling), minus the events-specific
-    * timestamp normalization. The vector-ingest query streams
-    * `embeddings.parquet` through this: at production scale the "table"
-    * is the landing directory new embedding batches arrive in, rate-
-    * limited by maxFilesPerTrigger. */
+    * events machinery generalized, minus the events-specific timestamp
+    * normalization. The vector-ingest query streams `embeddings.parquet`
+    * through this: at production scale the "table" is the landing
+    * directory new embedding batches arrive in, rate-limited by
+    * maxFilesPerTrigger.
+    *
+    * The file source wants a directory of FILES, so the stream reads a
+    * link farm staged once per version of the table ([[graft.Staging]]):
+    * one symlink for a single-file table, one per part for a
+    * Spark-written table (a DIRECTORY of part files, as ScaleGen writes
+    * at sf1), because the file source does not recurse into nested
+    * directories and a symlinked directory would stream ZERO rows. The
+    * links hold no derived data, but the farm's name carries the table's
+    * path and version, so no two tables share a farm, a rewritten table
+    * gets a fresh one, and a published farm never holds a stale link. */
   private[graft] def readTable(spark: SparkSession, dir: String,
       file: String): DataFrame = {
-    val base = file.stripSuffix(".parquet")
+    import java.nio.file.{Files, Paths}
     val path = s"$dir/$file"
     // the batch reader's memo: inferred once per version of the table
     val schema = graft.Tables.parquet(spark, path).schema
-    // the file source wants a directory of FILES; stage one containing
-    // symlinks to the (read-only) events data. A single-file table gets
-    // one symlink; a Spark-written table (a DIRECTORY of part files —
-    // the sf1 ScaleGen output) gets one symlink per part, because the
-    // file stream source does not recurse into nested directories — a
-    // symlinked directory would silently stream ZERO rows (the round-11
-    // sf1 validation caught exactly that: 11 empty q_stream_* dumps).
-    // Unlike the graft.Staging derived artifacts the symlinks hold NO
-    // derived data — they always read whatever bytes currently live at
-    // the source — but the PART LIST of a directory table can change on
-    // regeneration, so that case keys on the content fingerprint.
     // absolutize BEFORE linking: symlink targets are stored verbatim, so
     // a relative sf dir would make links under /tmp resolve relative to
     // the staging dir and dangle — silently streaming zero rows
-    val src = java.nio.file.Paths.get(path).toAbsolutePath.normalize
-    // idempotent link (re)creation that REPAIRS stale state: plain
-    // Files.exists() FOLLOWS links, so a dangling leftover (e.g. from a
-    // pre-round-12 relative-path run) reads as absent and a bare
-    // createSymbolicLink would throw FileAlreadyExists; check the link
-    // itself (NOFOLLOW), and replace any symlink that no longer points
-    // at the current target
-    def ensureLink(l: java.nio.file.Path, target: java.nio.file.Path): Unit = {
-      import java.nio.file.{Files, LinkOption}
-      if (Files.exists(l, LinkOption.NOFOLLOW_LINKS)) {
-        if (Files.isSymbolicLink(l) &&
-            Files.readSymbolicLink(l) == target) return
-        Files.delete(l)
-      }
-      Files.createSymbolicLink(l, target)
-    }
-    val staged =
-      if (java.nio.file.Files.isDirectory(src)) {
-        // buildOnce closes the round-12 delete-then-create race: the link
-        // farm appears atomically, never half-populated
-        graft.Staging.buildOnce(
-            graft.Staging.path(s"graft_${base}_parts", path), "_STAGED") {
-          tmp =>
-            val parts = java.nio.file.Files.list(src)
-            try {
-              val it = parts.iterator()
-              while (it.hasNext) {
-                val p = it.next()
-                if (p.getFileName.toString.endsWith(".parquet"))
-                  ensureLink(tmp.resolve(p.getFileName.toString), p)
-              }
-            } finally parts.close()
+    val src = Paths.get(path).toAbsolutePath.normalize
+    val staged = graft.Staging.buildOnce(graft.Staging.path(
+        s"graft_${file.stripSuffix(".parquet")}_parts", path), "_STAGED") { tmp =>
+      val parts =
+        if (!Files.isDirectory(src)) Seq(src)
+        else {
+          val ls = Files.list(src)
+          try {
+            import scala.jdk.CollectionConverters._
+            ls.iterator().asScala
+              .filter(_.getFileName.toString.endsWith(".parquet")).toList
+          } finally ls.close()
         }
-      } else {
-        // keyed on a digest of the absolute source path, so no two sources
-        // share a link: a second read would re-point a stream already
-        // built over the first
-        val digest = java.security.MessageDigest.getInstance("MD5")
-          .digest(src.toString.getBytes("UTF-8")).take(8)
-          .map(b => f"$b%02x").mkString
-        val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-          s"graft_${base}_$digest")
-        java.nio.file.Files.createDirectories(out)
-        ensureLink(out.resolve(file), src)
-        out
-      }
+      parts.foreach(p => Files.createSymbolicLink(tmp.resolve(p.getFileName.toString), p))
+    }
     spark.readStream.schema(schema).parquet(staged.toString)
   }
 

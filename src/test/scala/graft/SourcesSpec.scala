@@ -64,19 +64,41 @@ class SourcesSpec extends SparkSpec {
       agg.orderBy("l_returnflag").collect().toSeq)
   }
 
-  test("compute-dense split estimate memoizes per path; failures are not cached") {
-    // round-21 (round-20 advice): the guard's file-metadata probe was
-    // ~40 live getFileStatus round-trips per query construction — it is
-    // now memoized per corpus path for the JVM. A probe FAILURE must
-    // not be memoized (a corpus appearing later re-estimates fresh).
-    val key = s"$tmp/split_memo_probe_${System.nanoTime()}"
-    intercept[java.io.FileNotFoundException] {
-      Tables.splitEstimate(spark, key, () => throw new java.io.FileNotFoundException(key))
+  test("the dense guard follows the current listing") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.{
+      REPARTITION_BY_NUM, ShuffleExchangeExec}
+    val dir = Files.createTempDirectory("graft_dense_")
+    val table = dir.resolve("documents.parquet")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    // whether documentsDense, built at parallelism 32, hash-spreads its scan
+    def guarded: Boolean = {
+      val df = org.apache.spark.GraftParallelismBridge
+        .withDefaultParallelism(spark.sparkContext, 32) {
+          Tables(spark, dir.toString).documentsDense
+        }
+      df.queryExecution.sparkPlan.exists {
+        case e: ShuffleExchangeExec if e.shuffleOrigin == REPARTITION_BY_NUM =>
+          e.child.exists(_.isInstanceOf[FileSourceScanExec])
+        case _ => false
+      }
     }
-    assert(Tables.splitEstimate(spark, key, () => 7L) == 7L,
-      "a failed probe must not poison the memo")
-    assert(Tables.splitEstimate(spark, key, () => 99L) == 7L,
-      "the estimate must be memoized per path")
+    try {
+      writeParquetFile(docs, table)
+      assert(guarded, "a one-file corpus lost the repartition guard")
+      Staging.deleteRecursively(table)
+      docs.repartition(8).write.parquet(table.toString)
+      val parts = Files.list(table)
+      try assert(parts.filter(_.getFileName.toString.endsWith(".parquet")).count() == 8)
+      finally parts.close()
+      assert(!guarded, "a corpus of 8 parts at parallelism 32 kept the guard")
+      Staging.deleteRecursively(table)
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        Tables(spark, dir.toString).documentsDense)
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      writeParquetFile(docs, table)
+      assert(guarded, "the corpus written back did not restore the guard")
+    } finally Staging.deleteRecursively(dir)
   }
 
   test("dense accessor on a missing corpus raises the canonical scan error") {

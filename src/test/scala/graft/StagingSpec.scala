@@ -1,14 +1,25 @@
 package graft
 
 import java.nio.file.{Files, Path}
-import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.BeforeAndAfterAll
 
-/** Staleness pins for the content-addressed staging key and the
-  * compute-dense split memo: an input rewritten in place, or an engine
-  * rebuilt with different code, must never be served the old answer. */
-class StagingSpec extends AnyFunSuite {
+/** Staleness pins for the content-addressed staging key: an input
+  * rewritten in place, or an engine rebuilt with different code, must
+  * never be served the old answer. */
+class StagingSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private def tmpDir(tag: String): Path = Files.createTempDirectory(s"graft_$tag")
+  private val made = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  private def tmpDir(tag: String): Path = synchronized {
+    val d = Files.createTempDirectory(s"graft_$tag")
+    made += d
+    d
+  }
+
+  override def afterAll(): Unit =
+    try made.foreach(Staging.deleteRecursively) finally super.afterAll()
+
+  private def version(p: Path): String = Staging.listing(spark, p.toString).version
 
   test("staging fingerprint sees a same-size, same-mtime rewrite between the head and tail probes") {
     // 10,000 bytes: the head probe reads [0, 4096), the tail probe
@@ -18,28 +29,26 @@ class StagingSpec extends AnyFunSuite {
     val f = dir.resolve("part.bin")
     Files.write(f, Array.tabulate[Byte](10000)(i => (i % 251).toByte))
     val mtime = Files.getLastModifiedTime(f)
-    val before = Staging.fingerprint(dir.toString)
+    val before = version(dir)
     val raf = new java.io.RandomAccessFile(f.toFile, "rw")
     try { raf.seek(5000); raf.write(Array.fill[Byte](101)(0x7f)) }
     finally raf.close()
     Files.setLastModifiedTime(f, mtime)
     assert(Files.size(f) == 10000L)
     assert(Files.getLastModifiedTime(f) == mtime)
-    assert(Staging.fingerprint(dir.toString) != before,
+    assert(version(dir) != before,
       "in-place rewrite of the file middle kept the old fingerprint")
   }
 
-  test("split estimate re-runs when the corpus file is rewritten at a different size") {
-    val f = tmpDir("split_memo").resolve("documents.parquet")
+  test("the version of a single file changes when its bytes change") {
+    val f = tmpDir("fp_file").resolve("t.parquet")
     Files.write(f, Array.fill[Byte](100)(1))
-    var runs = 0
-    def estimate(): Long = Tables.splitEstimate(TestSpark.spark, f.toString,
-      () => { runs += 1; runs.toLong })
-    assert(estimate() == 1L)
-    assert(estimate() == 1L && runs == 1, "unchanged file must hit the memo")
-    Files.write(f, Array.fill[Byte](200)(2))
-    assert(estimate() == 2L && runs == 2,
-      "a file rewritten in place kept its stale split estimate")
+    val mtime = Files.getLastModifiedTime(f)
+    val before = version(f)
+    assert(version(f) == before, "two listings of one unchanged file disagree")
+    Files.write(f, Array.fill[Byte](100)(2))
+    Files.setLastModifiedTime(f, mtime)
+    assert(version(f) != before, "a rewritten file kept its old version")
   }
 
   test("code digest is stable on one class root and a one-byte class change moves the staged path") {

@@ -70,6 +70,20 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
     assert(again.agg(sum("y")).head().getLong(0) == (1 to 20).sum)
   }
 
+  test("a single file rewritten in place at the same size and mtime is inferred again") {
+    val f = tmp.resolve("same_stamp.parquet")
+    writeParquetFile(twoCols, f)
+    assert(Tables.parquet(spark, f.toString).columns.toSeq == Seq("id", "x"))
+    val (size, mtime) = (Files.size(f), Files.getLastModifiedTime(f))
+    writeParquetFile(twoCols.withColumnRenamed("x", "y"), f)
+    Files.setLastModifiedTime(f, mtime)
+    assert(Files.size(f) == size, "the renamed column changed the file size")
+    val again = Tables.parquet(spark, f.toString)
+    assert(again.columns.toSeq == Seq("id", "y"),
+      "a same-size, same-mtime rewrite kept the old schema")
+    assert(again.agg(sum("y")).head().getLong(0) == (0 until 20).map(_ * 2).sum)
+  }
+
   test("a parquet conf or case sensitivity changes the key, and the read infers again") {
     val p = tmp.resolve("confs").toString
     twoCols.coalesce(1).write.parquet(p)
