@@ -26,8 +26,7 @@ import org.apache.spark.sql.SparkSession
   * (`EventsStream.readTable`) and the similarity guards' cached
   * verdicts; the dense-scan guard reads its file count and bytes. An
   * input rewritten in place gets a new version, so nothing derived from
-  * its old bytes is served again, and two inputs share an artifact only
-  * by sharing path, listing and probed bytes.
+  * its old bytes is served again, and no two input paths share one.
   */
 object Staging {
 

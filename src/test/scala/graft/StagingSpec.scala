@@ -10,7 +10,7 @@ class StagingSpec extends SparkSpec with BeforeAndAfterAll {
 
   private val made = scala.collection.mutable.ArrayBuffer.empty[Path]
 
-  private def tmpDir(tag: String): Path = synchronized {
+  private def tmpDir(tag: String): Path = {
     val d = Files.createTempDirectory(s"graft_$tag")
     made += d
     d
