@@ -64,6 +64,28 @@ class SourcesSpec extends SparkSpec {
       agg.orderBy("l_returnflag").collect().toSeq)
   }
 
+  test("compute-dense split estimate memoizes per path; failures are not cached") {
+    // The estimate has no memo of its own: it is read off the one listing
+    // that also keys the dense read's schema memo, one entry per path. A
+    // missing corpus leaves no entry, so a corpus that appears later is
+    // read and estimated fresh.
+    val dir = Files.createTempDirectory("graft_dense_memo_")
+    val table = dir.resolve("documents.parquet")
+    val docs = spark.read.parquet(s"$sf/documents.parquet")
+    def dense = Tables(spark, dir.toString).documentsDense
+    try {
+      intercept[org.apache.spark.sql.AnalysisException](dense)
+      writeParquetFile(docs, table)
+      val (first, firstJobs) = jobsDuring(dense)
+      assert(firstJobs == 1,
+        s"the corpus written after a failed read ran $firstJobs jobs, not one inference")
+      assert(first.schema == docs.schema)
+      val (again, againJobs) = jobsDuring(dense)
+      assert(againJobs == 0, s"a second dense read of one unchanged path ran $againJobs jobs")
+      assert(again.count() == docs.count())
+    } finally Staging.deleteRecursively(dir)
+  }
+
   test("the dense guard follows the current listing") {
     import org.apache.spark.sql.execution.FileSourceScanExec
     import org.apache.spark.sql.execution.exchange.{

@@ -35,4 +35,22 @@ abstract class SparkSpec extends AnyFunSuite {
     Files.move(one, file, StandardCopyOption.REPLACE_EXISTING)
     graft.Staging.deleteRecursively(tmp)
   }
+
+  /** Spark jobs started while `body` ran, counted by a listener. */
+  protected def jobsDuring[A](body: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    Forensics.drainListenerBus(sc)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      Forensics.drainListenerBus(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -51,6 +51,22 @@ class StagingSpec extends SparkSpec with BeforeAndAfterAll {
     assert(version(f) != before, "a rewritten file kept its old version")
   }
 
+  test("split estimate re-runs when the corpus file is rewritten at a different size") {
+    // the dense guard's estimate is max(files, bytes / 128 MB) of the
+    // listing each dense read makes, so its inputs are never stale
+    val f = tmpDir("split_memo").resolve("documents.parquet")
+    Files.write(f, Array.fill[Byte](100)(1))
+    val before = Staging.listing(spark, f.toString)
+    assert(before.files == 1 && before.bytes == 100L)
+    assert(Staging.listing(spark, f.toString) == before,
+      "two listings of one unchanged file disagree")
+    Files.write(f, Array.fill[Byte](200)(2))
+    val after = Staging.listing(spark, f.toString)
+    assert(after.files == 1 && after.bytes == 200L,
+      "a file rewritten in place kept its stale size")
+    assert(after.version != before.version)
+  }
+
   test("code digest is stable on one class root and a one-byte class change moves the staged path") {
     val a = tmpDir("code_a")
     Files.createDirectories(a.resolve("graft/x"))

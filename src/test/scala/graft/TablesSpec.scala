@@ -1,9 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -17,23 +15,6 @@ class TablesSpec extends SparkSpec with BeforeAndAfterAll {
 
   override def afterAll(): Unit =
     try Staging.deleteRecursively(tmp) finally super.afterAll()
-
-  /** Spark jobs started while `body` ran, counted by a listener. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    Forensics.drainListenerBus(sc)
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      Forensics.drainListenerBus(sc)
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def twoCols = spark.range(20).select(col("id"), (col("id") * 2).as("x"))
 
