@@ -75,4 +75,35 @@ object Forensics {
     try org.apache.spark.metrics.source.CodegenMetrics
       .METRIC_COMPILATION_TIME.getCount
     catch { case _: Throwable => -1L }
+
+  /** A process the JVM started: its command line, and the frames
+    * (`class.method`, innermost first) of the thread that started it. */
+  final case class Fork(command: String, frames: Seq[String])
+
+  /** `body`'s result and every process the JVM started while it ran, in
+    * any thread, from an in-process JFR recording of `jdk.ProcessStart`
+    * with stack traces (JFR keeps the innermost 64 frames). The recording
+    * is read back from a dump file deleted afterwards. */
+  def forksDuring[A](body: => A): (A, Seq[Fork]) = {
+    import scala.jdk.CollectionConverters._
+    val rec = new jdk.jfr.Recording()
+    val dump = java.nio.file.Files.createTempFile("graft_forks_", ".jfr")
+    try {
+      rec.enable("jdk.ProcessStart").withStackTrace()
+      rec.start()
+      val out = try body finally rec.stop()
+      rec.dump(dump)
+      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map { e =>
+          val frames = Option(e.getStackTrace).toSeq.flatMap(_.getFrames.asScala)
+            .map(f => s"${f.getMethod.getType.getName}.${f.getMethod.getName}")
+          Fork(e.getString("command"), frames)
+        }.toSeq
+      (out, forks)
+    } finally {
+      rec.close()
+      java.nio.file.Files.deleteIfExists(dump)
+    }
+  }
 }

@@ -102,8 +102,7 @@ object EventsStream {
         "node, so its emission is O(input rows) — use runAggregated instead")
     val name = s"graft_stream_sink_${n.incrementAndGet()}"
     try {
-      graft.Graft.withConf(spark,
-          "spark.sql.shuffle.partitions" -> stateWidth(spark, df).toString) {
+      graft.Graft.withConf(spark, backfillConf(spark, df): _*) {
         val ckpt = ephemeralCheckpoint(name)
         val q = df.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", ckpt.toString)
@@ -150,6 +149,14 @@ object EventsStream {
     }
     bounded(df.queryExecution.analyzed)
   }
+
+  /** The session confs a backfill of `df` runs under, scoped to the run by
+    * [[graft.Graft.withConf]]: its [[stateWidth]], and [[LocalCheckpointFiles]]
+    * for its ephemeral checkpoint. */
+  private def backfillConf(spark: SparkSession, df: DataFrame): Seq[(String, String)] =
+    Seq("spark.sql.shuffle.partitions" -> stateWidth(spark, df).toString,
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[LocalCheckpointFiles].getName)
 
   /** State-store width for a backfill of `df`: [[stateWidth]] over its
     * [[sourceBytes]], read from the session's own confs (default
@@ -203,9 +210,12 @@ object EventsStream {
     * ENOSPC mid-query), tmpdir otherwise. The checkpoint of an
     * AvailableNow backfill into an ephemeral sink is itself ephemeral —
     * there is no restart to recover; a production deployment passes its
-    * own durable checkpointLocation and never enters this path.
-    * State-store deltas and WAL fsyncs land in memory instead of disk,
-    * which halved the per-batch commit cost.
+    * own durable checkpointLocation and never enters this path, and keeps
+    * Spark's default checkpoint file manager. The run writes this dir
+    * through [[LocalCheckpointFiles]], which forks no `chmod` or
+    * `readlink` per file. Those forks, not fsync (Hadoop's local
+    * filesystem syncs nothing on close), were the per-file cost of a
+    * commit (SCALE.md, "Ephemeral checkpoint budget").
     *
     * Lifecycle contract: the CALLER deletes the dir via [[deleteNow]]
     * immediately after `awaitTermination()` — RAM-backed checkpoints
@@ -258,8 +268,7 @@ object EventsStream {
     deleteOnExit(out)
     val schema = perBatch(spark.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)).schema
-    graft.Graft.withConf(spark,
-        "spark.sql.shuffle.partitions" -> stateWidth(spark, df).toString) {
+    graft.Graft.withConf(spark, backfillConf(spark, df): _*) {
       val ckpt = ephemeralCheckpoint(s"agg_$id")
       val q = df.writeStream
         .outputMode(mode)

@@ -92,8 +92,8 @@ object QTime {
           val c0 = procCpu; val g0 = gcMs
           val j0 = graft.Forensics.jitMillis
           val cg0 = graft.Forensics.codegenCompileCount
-          val t0 = System.nanoTime()
-          val df = q.run(spark, dir)
+          // forks= counts the processes started during the rep, such as
+          // Hadoop's local filesystem running chmod per file it creates
           // GRAFT_QTIME_PLAN: drive the action through df's OWN
           // QueryExecution (collect), so the printed executedPlan is
           // the AQE-final, codegen-collapsed plan that actually ran —
@@ -101,8 +101,12 @@ object QTime {
           // unexecuted (isFinalPlan=false, no WSCG wrappers), which
           // misled the r18 codegen investigation until caught
           val plan = rep == 1 && sys.env.contains("GRAFT_QTIME_PLAN")
-          if (plan) df.collect() else df.count()
-          val wall = (System.nanoTime() - t0) / 1e9
+          val ((df, wall), forks) = graft.Forensics.forksDuring {
+            val t0 = System.nanoTime()
+            val df = q.run(spark, dir)
+            if (plan) df.collect() else df.count()
+            (df, (System.nanoTime() - t0) / 1e9)
+          }
           if (plan) println(df.queryExecution.executedPlan.toString)
           spark.catalog.clearCache()
           drainListenerBus()
@@ -118,7 +122,8 @@ object QTime {
             f"shufWrMB=${mb(shufWrite.get - sw0)}%9.1f " +
             f"shufRecs=${shufRecs.get - rc0}%10d " +
             f"shufRdMB=${mb(shufRead.get - sr0)}%9.1f " +
-            f"tasks=${nTasks.get - tk0}%5d jobs=${nJobs.get - jb0}%4d")
+            f"tasks=${nTasks.get - tk0}%5d jobs=${nJobs.get - jb0}%4d " +
+            f"forks=${forks.size}%4d")
         }
       }
     spark.stop()

@@ -728,4 +728,35 @@ class StreamingSpec extends SparkSpec {
       s"stream/batch counts drifted: stream=$streamed batch=$batch")
     assert(out.filter(col("n") > 0).count() == batch.size)
   }
+
+  test("a stream run forks no process from its checkpoint") {
+    // Hadoop's local filesystem, without libhadoop, forks chmod for every
+    // file it creates and readlink for every FileContext rename; the
+    // backfill checkpoints go through LocalCheckpointFiles, which does
+    // neither. Spark's ArtifactManager may also `rm -rf` the artifact dir
+    // of an earlier, garbage-collected session from a Cleaner thread
+    // while the run is recorded; that fork is not the run's.
+    def ofRun(forks: Seq[Forensics.Fork]): Seq[Forensics.Fork] =
+      forks.filterNot(_.frames.exists(_.contains(".sql.artifact.ArtifactManager")))
+    def describe(forks: Seq[Forensics.Fork]): String =
+      forks.groupBy(_.command.takeWhile(_ != ' '))
+        .map { case (c, fs) => s"${fs.size} x $c" }.mkString(", ")
+    Seq(Streaming.qStreamTumbling, Streaming.qStreamDedup).foreach { q =>
+      q.run(spark, sf).collect()
+      val (rows, forks) = Forensics.forksDuring(q.run(spark, sf).collect())
+      assert(rows.nonEmpty)
+      assert(ofRun(forks).isEmpty, s"${q.name} forked ${describe(ofRun(forks))}")
+    }
+    // the sessions go through runAggregated, whose parquet partials are
+    // written by Hadoop's local filesystem and still fork: count only the
+    // forks made for the checkpoint and its state stores
+    val q = Streaming.qStreamSession
+    q.run(spark, sf).collect()
+    val (rows, forks) = Forensics.forksDuring(q.run(spark, sf).collect())
+    val checkpoint = forks.filter(_.frames.exists(f =>
+      f.contains(".execution.streaming.checkpointing.") ||
+        f.contains(".execution.streaming.state.")))
+    assert(rows.nonEmpty)
+    assert(checkpoint.isEmpty, s"${q.name} forked ${describe(checkpoint)}")
+  }
 }
