@@ -17,7 +17,7 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedChe
   * Without `libhadoop`, Hadoop's local filesystem forks a process for
   * file metadata: every `create` and `mkdirs` runs `chmod`
   * (`RawLocalFileSystem.setPermission`), and every `FileContext` rename,
-  * the one Spark's default manager uses, runs `readlink` twice. Each
+  * the one Spark's default manager uses, runs `readlink` four times. Each
   * offset, commit, state and checksum file of a stream run paid for
   * those forks (SCALE.md, "Ephemeral checkpoint budget").
   *
