@@ -251,7 +251,7 @@ object Bench {
     val qs = jmap(headline.flatMap(k => warm.get(k).map(k -> _)))
     // session-rot self-check: a steady-state session must not get SLOWER.
     // Any query whose warm pass exceeds 1.5x its cold pass AND 1.5 s
-    // absolute is a candidate — round 4's /dev/shm checkpoint
+    // absolute is a candidate — round 4's RAM-backed checkpoint
     // accumulation was exactly this pattern (every degraded query
     // reached >= 1.6 s warm) and was only visible by diffing per-query
     // maps by hand. The 1.5 s floor keeps the list from flapping on

@@ -4,9 +4,18 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.SparkSession
 
-/** Content-addressed staging for write-once derived artifacts (bucketed
-  * copies, dedup indexes, sketch tables, format conversions), and the
-  * one rule that says which version of an input is which.
+/** Where the engine's derived data is written, how it is published and
+  * when it is deleted, and the one rule that says which version of an
+  * input is which. No other module picks a scratch path or deletes one.
+  *
+  * Lifetimes. Content-addressed sets ([[stage]]: bucketed layouts, dedup
+  * and vector indexes, sketch tables, format conversions, link farms)
+  * are never deleted: a set is named by the code and the input it was
+  * built from, so it stays valid for as long as both exist. Per-run
+  * directories ([[runDir]]: stream checkpoints, `foreachBatch`
+  * partials) are [[release]]d right after their run, or, when a
+  * returned frame still reads them, at exit. One shutdown hook is the
+  * backstop: it deletes every run directory not yet released.
   *
   * Input identity ([[listing]]). One recursive listing of an input, a
   * file or a directory tree, through Hadoop `FileSystem` (so any
@@ -126,12 +135,12 @@ object Staging {
     getClass.getProtectionDomain.getCodeSource.getLocation.toURI))
 
   private[graft] def pathFor(code: String, prefix: String, srcDir: String): Path =
-    Paths.get(sys.props("java.io.tmpdir"),
-      s"${prefix}_${code}_${listing(SparkSession.active, srcDir).version}")
+    Paths.get(tmpDir, s"${prefix}_${code}_${listing(SparkSession.active, srcDir).version}")
 
-  /** /tmp staging path for artifact `prefix` derived from `srcDir`:
-    * artifact identity = engine [[code]] digest × the input's version
-    * ([[listing]], under the active session's Hadoop conf). */
+  /** Staging path for artifact `prefix` derived from `srcDir`, under
+    * `java.io.tmpdir`: artifact identity = engine [[code]] digest × the
+    * input's version ([[listing]], under the active session's Hadoop
+    * conf). */
   def path(prefix: String, srcDir: String): Path = pathFor(code, prefix, srcDir)
 
   /** The signature before the code digest replaced the hand-kept version
@@ -141,36 +150,86 @@ object Staging {
   def path(prefix: String, srcDir: String, version: Int): Path =
     pathFor(code, prefix, srcDir)
 
-  /** Write-once build with ATOMIC publication: two JVMs sharing /tmp (a
-    * test suite and a bench run) must never interleave
-    * `mode("overwrite")` writes, with one reading a directory the other
-    * is mid-rewrite. `build` runs against a process-unique temp sibling;
-    * the finished tree is renamed into place in one filesystem
-    * operation, so readers only ever see absent-or-complete. Losing a
-    * publication race is benign: the build is deterministic (that's the
-    * staging contract), so the winner's bytes are ours — the loser just
-    * deletes its temp tree.
-    * Returns `out` with `marker` guaranteed present. */
-  def buildOnce(out: Path, marker: String)(build: Path => Unit): Path = {
-    if (Files.exists(out.resolve(marker))) return out
+  /** The file whose presence marks a staged set as published. */
+  private[graft] val Published = "_SUCCESS"
+
+  /** The staged set `prefix` derived from `srcDir` (at [[path]], plus
+    * `suffix` for a sidecar named after another set), built by `build` the
+    * first time any JVM asks for it; returns its path.
+    *
+    * Publication is atomic: two JVMs sharing the temp dir (a test suite
+    * and a bench run) must never interleave `mode("overwrite")` writes,
+    * with one reading a directory the other is mid-rewrite. `build` runs
+    * against a process-unique temp sibling; the finished tree, with
+    * [[Published]] in it, is renamed into place in one filesystem
+    * operation, so readers only ever see absent-or-complete. A build
+    * that throws publishes nothing. Losing a publication race is benign:
+    * the build is deterministic (that's the staging contract), so the
+    * winner's bytes are ours — the loser just deletes its temp tree. */
+  def stage(prefix: String, srcDir: String, suffix: String = "")(
+      build: Path => Unit): String = {
+    val out = Paths.get(path(prefix, srcDir).toString + suffix)
+    if (Files.exists(out.resolve(Published))) return out.toString
     val tmp = out.resolveSibling(out.getFileName.toString +
       s".build-${ProcessHandle.current().pid()}-${System.nanoTime()}")
     Files.createDirectories(tmp)
     try {
       build(tmp)
-      if (!Files.exists(tmp.resolve(marker)))
-        Files.write(tmp.resolve(marker), Array.emptyByteArray)
+      if (!Files.exists(tmp.resolve(Published)))
+        Files.write(tmp.resolve(Published), Array.emptyByteArray)
       try Files.move(tmp, out, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
       catch {
         // destination appeared since our check: a concurrent builder
         // published first — use theirs, drop ours
         case _: java.nio.file.FileAlreadyExistsException
             | _: java.nio.file.FileSystemException
-            if Files.exists(out.resolve(marker)) => ()
+            if Files.exists(out.resolve(Published)) => ()
       }
     } finally if (Files.exists(tmp)) deleteRecursively(tmp)
-    out
+    out.toString
   }
+
+  /** A new, empty directory for one run's scratch data (a stream's
+    * checkpoint, its `foreachBatch` partials, a test's files), named
+    * `prefix` plus a unique suffix. With `ram`, it sits in RAM-backed
+    * `/dev/shm` when that is writable with at least 1 GiB usable
+    * (containers often cap tmpfs at 64 MB, where state deltas would hit
+    * ENOSPC mid-query); otherwise, and without `ram`, in
+    * `java.io.tmpdir`. The caller [[release]]s it as soon as nothing
+    * reads it any more; the exit hook deletes whatever is left. */
+  def runDir(prefix: String, ram: Boolean): Path = {
+    val shm = Paths.get("/dev/shm")
+    val inRam = ram && Files.isWritable(shm) &&
+      (try Files.getFileStore(shm).getUsableSpace >= (1L << 30)
+       catch { case _: Throwable => false })
+    val dir = Files.createTempDirectory(if (inRam) shm else Paths.get(tmpDir), prefix)
+    exitHook
+    atExit.add(dir)
+    dir
+  }
+
+  /** Delete a [[runDir]] now and drop it from the exit hook's queue.
+    * Best-effort: a failure leaves the dir to the hook. */
+  def release(dir: Path): Unit = {
+    deleteRecursively(dir)
+    atExit.remove(dir)
+  }
+
+  private def tmpDir: String = sys.props("java.io.tmpdir")
+
+  /** Run directories not yet released, deleted by ONE shutdown hook (not
+    * one hook thread per directory: a long-lived session makes an
+    * unbounded number of them). */
+  private val atExit = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
+
+  private lazy val exitHook: Unit =
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      var dir = atExit.poll()
+      while (dir != null) {
+        deleteRecursively(dir)
+        dir = atExit.poll()
+      }
+    }))
 
   /** Best-effort recursive delete with the walk's directory handles
     * closed (long-lived sessions call this once per query). */

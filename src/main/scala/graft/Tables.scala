@@ -154,6 +154,41 @@ object Tables {
     spark.read.schema(schema).parquet(path)
   }
 
+  /** Buckets of every staged bucketed layout. [[writeBucketed]] and
+    * [[bucketed]] must agree on it: Spark maps bucket ids from the
+    * writer's file names. */
+  private val Buckets = 8
+
+  /** `df` written at `path` bucketed and sorted on `key`. A bucketed write
+    * needs a catalog name even for a one-shot build: a process-unique
+    * one, dropped afterwards (the files stay: the table is external). */
+  private[graft] def writeBucketed(df: DataFrame, key: String, path: String): Unit = {
+    val name = s"graft_bucket_build_$uniqueSuffix"
+    try df.write.bucketBy(Buckets, key).sortBy(key).option("path", path).saveAsTable(name)
+    finally df.sparkSession.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  /** The layout [[writeBucketed]] wrote at `path`, read as a bucketed
+    * table. Its resolved relation, bucket spec included, is captured
+    * before the catalog entry is dropped, so the frame keeps reading the
+    * immutable files. The name is unique per call: PID alone collides
+    * when two threads of one JVM read concurrently, and one thread's
+    * DROP could remove the table between the other's CREATE and
+    * `spark.table`. */
+  private[graft] def bucketed(spark: SparkSession, path: String, key: String): DataFrame = {
+    val cols = parquet(spark, path).schema.fields
+      .map(f => s"${f.name} ${f.dataType.catalogString}").mkString(", ")
+    val name = s"graft_bucketed_${path.hashCode.toHexString}_$uniqueSuffix"
+    try {
+      spark.sql(s"CREATE TABLE $name ($cols) USING parquet CLUSTERED BY ($key) " +
+        s"SORTED BY ($key) INTO $Buckets BUCKETS LOCATION '$path'")
+      spark.table(name)
+    } finally spark.sql(s"DROP TABLE IF EXISTS $name")
+  }
+
+  private def uniqueSuffix: String =
+    s"${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
+
   /** [[parquet]]'s memo: path -> (key, inferred schema). One entry per
     * path; a new version replaces the old one. */
   private[graft] val schemas =

@@ -509,11 +509,7 @@ object Media {
     * operator under test), not the synthetic corpus's re-encode. */
   def codecMediaTable(spark: SparkSession, dir: String): Dataset[MediaRow] = {
     import spark.implicits._
-    // buildOnce publishes atomically so concurrent JVMs can't
-    // interleave overwrite writes
-    val out = graft.Staging.buildOnce(
-        graft.Staging.path("graft_codec_media", dir),
-        "_SUCCESS") { tmp =>
+    val out = graft.Staging.stage("graft_codec_media", dir) { tmp =>
       mediaTable(spark, dir).mapPartitions { it =>
         it.map { m =>
           if (m.kind != "image") m
@@ -532,7 +528,7 @@ object Media {
         }
       }.write.mode("overwrite").parquet(tmp.toString)
     }
-    graft.Tables.parquet(spark, out.toString).as[MediaRow]
+    graft.Tables.parquet(spark, out).as[MediaRow]
   }
 
   /** Decode + feature extraction, batched per partition. Image payloads
@@ -768,9 +764,7 @@ object Media {
     * equality is exact. */
   def jpegMediaPath(spark: SparkSession, dir: String): String = {
     import spark.implicits._
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_jpeg_media", dir),
-        "_JPEG_READY") { tmp =>
+    graft.Staging.stage("graft_jpeg_media", dir) { tmp =>
       mediaTable(spark, dir).filter(_.kind == "image")
         .mapPartitions { it =>
           it.flatMap { m =>
@@ -794,6 +788,6 @@ object Media {
         .repartitionByRange(8, org.apache.spark.sql.functions.col("media_id"))
         .sortWithinPartitions("media_id")
         .write.mode("overwrite").parquet(tmp.resolve("rasters").toString)
-    }.toString
+    }
   }
 }

@@ -316,14 +316,12 @@ object Aggregates {
     // content-fingerprinted path (graft.Staging): regenerated testdata →
     // fresh fingerprint → restage, so a rows-only query can never serve
     // sketches of a dataset that no longer exists
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_sketch_orders_month", dir),
-        "_SUCCESS") { tmp =>
+    graft.Staging.stage("graft_sketch_orders_month", dir) { tmp =>
       Tables(spark, dir).orders
         .groupBy(date_format(col("o_orderdate"), "yyyy-MM").as("o_month"))
         .agg(hll_sketch_agg(col("o_custkey"), lit(12)).as("sketch"))
         .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    }.toString
+    }
   }
 
   /** MERGEABLE QUANTILE SKETCH union — percentiles with the

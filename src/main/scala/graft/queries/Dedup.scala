@@ -1074,17 +1074,13 @@ object Dedup {
     * files; (b) the bloom sketch of those fingerprints, sized from their
     * count, as a flat binary file beside the count it was sized for
     * (`sketch.items`) — the scan-side filter loads it without touching
-    * the fp table at all. Write-once per sf dir, keyed by its own
-    * marker AFTER both parts land (`_SUCCESS` alone would race the
-    * sketch write — pattern: SourceQueries.zorderedOrdersPath). */
+    * the fp table at all. Write-once per sf dir, published only after
+    * both parts land ([[graft.Staging.stage]]). */
   private[graft] def dedupIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
     // content-fingerprinted (graft.Staging): a regenerated base corpus
-    // gets a fresh index path, never a stale fp/bloom pair;
-    // buildOnce publishes atomically (round-12 advice)
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_base_index", dir),
-        "_INDEX_READY") { tmp =>
+    // gets a fresh index path, never a stale fp/bloom pair
+    graft.Staging.stage("graft_dedup_base_index", dir) { tmp =>
       val (base, _) = baseBatchSplit(spark, dir, perturb = false)
       val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
       val baseFp = base.select(fp.as("fp")).distinct()
@@ -1093,7 +1089,7 @@ object Dedup {
       val (sketch, items) = graft.functions.BloomProbe.sizedSketch(
         spark.read.parquet(tmp.resolve("fps").toString), col("fp"))
       writeSketch(tmp, sketch, items)
-    }.toString
+    }
   }
 
   /** A staged sketch: `sketch.bin` (empty file = empty-set sentinel)
@@ -1211,9 +1207,7 @@ object Dedup {
     * batch-derived bytes. */
   private[graft] def dedupMergedIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_merged_index", dir),
-        "_INDEX_READY") { tmp =>
+    graft.Staging.stage("graft_dedup_merged_index", dir) { tmp =>
       val idx = java.nio.file.Paths.get(dedupIndexPath(spark, dir))
       val baseSketch = java.nio.file.Files.readAllBytes(idx.resolve("sketch.bin"))
       val baseItems =
@@ -1231,7 +1225,7 @@ object Dedup {
         else graft.functions.BloomProbe.sizedSketch(delta, col("fp"))
       writeSketch(tmp, graft.functions.BloomProbe.merge(baseSketch, deltaSketch),
         items)
-    }.toString
+    }
 
   /** Judged nightly index merge (round 13): day 1 indexes the base
     * snapshot; day 2's batch (Scramble % 8 = 0 — half the standard
@@ -1384,7 +1378,7 @@ object Dedup {
 
   /** Staged PERSISTED banded-LSH index of the base snapshot — the
     * skew-safe artifact for INCREMENTAL fuzzy dedup. Two parts, both
-    * write-once (same marker discipline as [[dedupIndexPath]]):
+    * write-once (published like [[dedupIndexPath]]):
     * `bands` = (band, key, base_doc), the exploded MinHash band keys
     * (16 hashes, 8 bands × 2 rows — the q_dedup_minhash_lsh scheme),
     * range-laid by (band, key) so a band probe touches few files;
@@ -1402,10 +1396,7 @@ object Dedup {
     * because no textual key exists. */
   private[graft] def lshIndexPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    // buildOnce publishes atomically (round-12 advice)
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_dedup_lsh_index", dir),
-        "_INDEX_READY") { tmp =>
+    graft.Staging.stage("graft_dedup_lsh_index", dir) { tmp =>
       val (base, _) =
         baseBatchSplit(spark, dir, perturb = false, dense = true)
       val arrays = base
@@ -1420,7 +1411,7 @@ object Dedup {
         .repartitionByRange(16, col("band"), col("key"))
         .sortWithinPartitions("band", "key")
         .write.mode("overwrite").parquet(tmp.resolve("bands").toString)
-    }.toString
+    }
   }
 
   /** Pair-count gate for broadcasting candidate structures: below this

@@ -117,47 +117,12 @@ object Graph {
     * suite and a bench run) now read one immutable artifact. */
   private[graft] def prBucketLayoutPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_pr_bucket", dir),
-        "_LAYOUT_READY") { tmp =>
+    graft.Staging.stage("graft_pr_bucket", dir) { tmp =>
       val edges = orderGraphEdges(spark, dir)
       val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-      // bucketed writes need a catalog name even for a one-shot build;
-      // process-unique, dropped in finally (files stay — external table)
-      val tName = "graft_pr_build_" +
-        s"${ProcessHandle.current().pid()}_${System.nanoTime()}"
-      try edges.join(broadcast(deg), "src")
-        .write.bucketBy(8, "src").sortBy("src")
-        .option("path", tmp.resolve("edges").toString).saveAsTable(tName)
-      finally spark.sql(s"DROP TABLE IF EXISTS $tName")
-    }.toString
-
-  /** Re-register the staged layout as an external BUCKETED table and
-    * eagerly capture its resolved relation (bucketing spec included):
-    * the DROP in finally removes only the catalog entry — the relation
-    * keeps reading the immutable staged files. The bucket spec in the
-    * DDL must match the writer's in [[prBucketLayoutPath]] (Spark maps
-    * bucket ids from the writer's file names). Catalog name carries the
-    * layout hash + PID so concurrent sessions never share a name. */
-  private def bucketedEdgeTable(
-      spark: org.apache.spark.sql.SparkSession, layout: String): DataFrame = {
-    val loc = s"$layout/edges"
-    val cols = Tables.parquet(spark, loc).schema.fields
-      .map(f => s"${f.name} ${f.dataType.catalogString}").mkString(", ")
-    // name carries layout hash + PID + nanoTime: PID alone collides when
-    // two THREADS of one JVM run this concurrently — one thread's
-    // finally-DROP could remove the table between the other's CREATE and
-    // spark.table() resolution (round-17 advice fix; matches the
-    // graft_pr_build_ naming on the build side)
-    val tName = s"graft_pr_edges_${loc.hashCode.toHexString}_" +
-      s"${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
-    spark.sql(s"DROP TABLE IF EXISTS $tName")
-    try {
-      spark.sql(s"CREATE TABLE $tName ($cols) USING parquet " +
-        s"CLUSTERED BY (src) SORTED BY (src) INTO 8 BUCKETS LOCATION '$loc'")
-      spark.table(tName)
-    } finally spark.sql(s"DROP TABLE IF EXISTS $tName")
-  }
+      Tables.writeBucketed(edges.join(broadcast(deg), "src"), "src",
+        tmp.resolve("edges").toString)
+    }
 
   /** The bucketed-layout iteration core: each power iteration
     * sort-merge-joins the rank table INTO the staged bucketed layout.
@@ -171,7 +136,7 @@ object Graph {
   private[graft] def pagerankBucketed(
       spark: org.apache.spark.sql.SparkSession, dir: String,
       iters: Int): DataFrame = {
-    val bucketed = bucketedEdgeTable(spark, prBucketLayoutPath(spark, dir))
+    val bucketed = Tables.bucketed(spark, s"${prBucketLayoutPath(spark, dir)}/edges", "src")
     // r0 straight off the bucketed layout (one row per src): the dedup
     // aggregate's required distribution is satisfied by the bucket
     // hashing, so even the seed-rank derivation exchanges nothing —

@@ -18,18 +18,6 @@ import org.apache.spark.sql.expressions.Window
 object Joins {
   import Num._
 
-  /** Staging dirs registered for end-of-JVM removal (bucketed-join
-    * layouts are rewritten per execution, so unlike the _SUCCESS-keyed
-    * stage() dirs they'd otherwise accumulate one copy per process).
-    * Delegates to EventsStream's single static exit hook — one cleanup
-    * path for the whole repo, deduplicated per dir here. */
-  private val cleanupRegistered =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[java.nio.file.Path]()
-
-  private[queries] def registerCleanup(dir: java.nio.file.Path): Unit =
-    if (cleanupRegistered.add(dir))
-      graft.streaming.EventsStream.deleteOnExit(dir)
-
   /** Star-schema join with explicit broadcast of the small dims.
     * orders⋈customer shuffles on custkey; nation/region ride along as
     * broadcast hash joins (no shuffle, no skew exposure). */
@@ -596,9 +584,9 @@ object Joins {
 
   /** Co-located (bucketed) join as a JUDGED query — the storage-layout
     * answer to the repeated-join shuffle: both sides are written
-    * bucketed+sorted on the join key (external-path tables under /tmp,
-    * re-staged per execution — the bucketed WRITE is part of the judged
-    * surface), after which the join needs no key exchange at any scale;
+    * bucketed+sorted on the join key once, as a staged layout
+    * ([[Tables.writeBucketed]]), after which the join needs no key
+    * exchange at any scale;
     * at 100 TB this is the difference between re-shuffling the fact
     * table per query and never shuffling it. The no-exchange plan shape
     * is pinned by PlanSpec/BucketingSpec (which force SMJ past the
@@ -620,50 +608,15 @@ object Joins {
     // wall at sf0.1, every execution, for bytes that never change.
     // Content-fingerprinted Staging path + atomic publication, exactly
     // like every other persisted index.
-    val layout = graft.Staging.buildOnce(
-        graft.Staging.path("graft_join_bucket", dir),
-        "_LAYOUT_READY") { tmp =>
+    val layout = graft.Staging.stage("graft_join_bucket", dir) { tmp =>
       val t = Tables(spark, dir)
-      // bucketed writes need a catalog name even for a one-shot build;
-      // process-unique, dropped in finally (files stay — external table)
-      val scope =
-        s"${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
-      val (liB, ordB) = (s"graft_li_build_$scope", s"graft_ord_build_$scope")
-      try {
-        t.lineitem.select("l_orderkey", "l_quantity")
-          .write.bucketBy(8, "l_orderkey").sortBy("l_orderkey")
-          .option("path", tmp.resolve("li").toString).saveAsTable(liB)
-        t.orders.select("o_orderkey", "o_orderpriority")
-          .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
-          .option("path", tmp.resolve("ord").toString).saveAsTable(ordB)
-      } finally {
-        spark.sql(s"DROP TABLE IF EXISTS $liB")
-        spark.sql(s"DROP TABLE IF EXISTS $ordB")
-      }
-    }.toString
-    // Re-register the immutable staged files as external BUCKETED
-    // tables and capture the resolved relations eagerly (bucket spec
-    // included) — the DROP in finally removes only the catalog entries.
-    // The DDL bucket spec must match the writer's above (Spark maps
-    // bucket ids from file names). Names carry layout hash + PID +
-    // nanoTime so concurrent sessions/threads never share an entry.
-    def bucketedTable(sub: String,
-        keyCol: String): org.apache.spark.sql.DataFrame = {
-      val loc = s"$layout/$sub"
-      val cols = Tables.parquet(spark, loc).schema.fields
-        .map(f => s"${f.name} ${f.dataType.catalogString}").mkString(", ")
-      val tName = s"graft_jb_${sub}_${loc.hashCode.toHexString}_" +
-        s"${ProcessHandle.current().pid()}_${System.nanoTime().toHexString}"
-      spark.sql(s"DROP TABLE IF EXISTS $tName")
-      try {
-        spark.sql(s"CREATE TABLE $tName ($cols) USING parquet " +
-          s"CLUSTERED BY ($keyCol) SORTED BY ($keyCol) INTO 8 BUCKETS " +
-          s"LOCATION '$loc'")
-        spark.table(tName)
-      } finally spark.sql(s"DROP TABLE IF EXISTS $tName")
+      Tables.writeBucketed(t.lineitem.select("l_orderkey", "l_quantity"),
+        "l_orderkey", tmp.resolve("li").toString)
+      Tables.writeBucketed(t.orders.select("o_orderkey", "o_orderpriority"),
+        "o_orderkey", tmp.resolve("ord").toString)
     }
-    val li = bucketedTable("li", "l_orderkey")
-    val ord = bucketedTable("ord", "o_orderkey")
+    val li = Tables.bucketed(spark, s"$layout/li", "l_orderkey")
+    val ord = Tables.bucketed(spark, s"$layout/ord", "o_orderkey")
     li.join(ord, col("l_orderkey") === col("o_orderkey"))
       .groupBy("o_orderpriority")
       .agg(count(lit(1)).as("n"), Num.dsum(col("l_quantity")).as("sum_qty"))

@@ -674,11 +674,10 @@ object Similarity {
 
   /** The staged build behind [[ivfIndexPath]] and [[ivfBaseIndexPath]]:
     * the quantizer trained on `slice` of the corpus, written beside the
-    * slice's inverted lists. buildOnce publishes atomically, so two JVMs
-    * sharing /tmp never interleave overwrite writes. */
+    * slice's inverted lists. */
   private def ivfIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
       prefix: String, slice: DataFrame => DataFrame): String =
-    graft.Staging.buildOnce(graft.Staging.path(prefix, dir), "_INDEX_READY") { tmp =>
+    graft.Staging.stage(prefix, dir) { tmp =>
       val n = slice(graft.Tables(spark, dir).embeddings
         .select(col("vec_id"), col("embedding")))
       ivfCentroids(n).coalesce(1)
@@ -689,7 +688,7 @@ object Similarity {
         .repartitionByRange(16, col("cluster"))
         .sortWithinPartitions("cluster")
         .write.mode("overwrite").parquet(tmp.resolve("lists").toString)
-    }.toString
+    }
 
   /** INCREMENTAL IVF ANN — the day-2 form of q_sim_ivf_ann and the
     * vector-search analog of q_dedup_incremental_indexed: the coarse
@@ -772,14 +771,12 @@ object Similarity {
     * write-once per corpus fingerprint. */
   private[graft] def ivfMergeDeltaPath(
       spark: org.apache.spark.sql.SparkSession, dir: String): String =
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_ivf_merge_delta", dir),
-        "_SUCCESS") { tmp =>
+    graft.Staging.stage("graft_ivf_merge_delta", dir) { tmp =>
       ivfMergeAssignments(spark, dir)
         .repartitionByRange(16, col("cluster"))
         .sortWithinPartitions("cluster")
         .write.mode("overwrite").parquet(tmp.toString)
-    }.toString
+    }
 
   /** q_sim_ivf_merge's oracle: [[ivfAnnOracleSql]] with the quantizer
     * trained on the BASE slice only — assignment of every vector
@@ -1028,26 +1025,22 @@ object Similarity {
     * WHICH rows a query reads (~nprobe/k of the corpus), the projected
     * sidecar decides HOW WIDE each read row is (8 dims instead of 64 —
     * the raw vectors stay in the base lists and are touched only for
-    * the top-k re-score). Write-once; the staged path DERIVES from the
-    * resolved base-index path (round-15 advice), which carries the
+    * the top-k re-score). Write-once; the staged path is the base
+    * index's own path plus `.jl` (round-15 advice), which carries the
     * corpus fingerprint and the engine code digest, so any change to
     * the base or to [[jlProjected]] forces a sidecar rebuild and the
     * "can never drift from the index it shadows" claim is structural,
     * not assumed. */
   private[graft] def ivfJlIndexPath(
-      spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val base = ivfIndexPath(spark, dir)
-    graft.Staging.buildOnce(
-        java.nio.file.Paths.get(base + ".jl"),
-        "_INDEX_READY") { tmp =>
-      Tables.parquet(spark, s"$base/lists")
+      spark: org.apache.spark.sql.SparkSession, dir: String): String =
+    graft.Staging.stage("graft_ivf_index", dir, suffix = ".jl") { tmp =>
+      Tables.parquet(spark, s"${ivfIndexPath(spark, dir)}/lists")
         .select(col("cluster"), col("vec_id"),
           jlProjected(col("embedding")).as("pemb"))
         .repartitionByRange(16, col("cluster"))
         .sortWithinPartitions("cluster")
         .write.mode("overwrite").parquet(tmp.resolve("plists").toString)
-    }.toString
-  }
+    }
 
   /** JL projection COMPOSED with the persisted IVF index — the judged
     * composition q_embed_project's scaladoc promises ("the two

@@ -23,16 +23,14 @@ object SourceQueries {
       fmt: String, df: => DataFrame,
       partitionCols: Seq[String] = Nil, coalesce1: Boolean = true): String = {
     // content-fingerprinted (graft.Staging): regenerated testdata lands
-    // in a fresh staged path instead of silently reusing stale copies;
-    // buildOnce publishes atomically (absent-or-complete, never partial)
-    graft.Staging.buildOnce(
-        graft.Staging.path(s"graft_src_${table}_$fmt", dir), "_SUCCESS") {
+    // in a fresh staged path instead of silently reusing stale copies
+    graft.Staging.stage(s"graft_src_${table}_$fmt", dir) {
       tmp =>
         (if (coalesce1) df.coalesce(1) else df).write.mode("overwrite")
           .format(fmt)
           .option("header", "true").partitionBy(partitionCols: _*)
           .save(tmp.toString)
-    }.toString
+    }
   }
 
   /** CSV nation ⋈ JSON region → nations per region. The oracle reads the
@@ -149,7 +147,7 @@ object SourceQueries {
     * wider dimension, i.e. a plain 1-D sort (measured: the unnormalized
     * curve tied the date sort on file skipping; the normalized one
     * beats it). The staged layout is range-partitioned and sorted by z
-    * (write-once, _SUCCESS-keyed); the judged query runs the 2-D box
+    * (write-once, [[graft.Staging.stage]]); the judged query runs the 2-D box
     * rollup over the z-laid table AND pins the curve values themselves
     * (sum/min/max of z per group — integer-exact, same rendered algebra
     * in DuckDB). A hash match proves the layout changed the I/O, not
@@ -202,9 +200,7 @@ object SourceQueries {
     * (shared with LayoutSpec). */
   private[graft] def zorderedOrdersPath(
       spark: SparkSession, dir: String): String = {
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_src_orders_zorder_parquet", dir),
-        "_SUCCESS") { tmp =>
+    graft.Staging.stage("graft_src_orders_zorder_parquet", dir) { tmp =>
       val t = Tables(spark, dir)
       val withDay = t.orders
         .withColumn("dd", datediff(col("o_orderdate"),
@@ -222,7 +218,7 @@ object SourceQueries {
       withZ.repartitionByRange(64, col("zval"))
         .sortWithinPartitions("zval")
         .write.mode("overwrite").parquet(tmp.toString)
-    }.toString
+    }
   }
 
   /** Small-file COMPACTION — the lake-maintenance pass every 100 TB table
@@ -279,9 +275,7 @@ object SourceQueries {
   private[graft] def compactedDocsPath(
       spark: SparkSession, dir: String): String = {
     val frag = fragmentedDocsPath(spark, dir)
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_src_docs_compact_parquet", dir),
-        "_SUCCESS") { tmp =>
+    graft.Staging.stage("graft_src_docs_compact_parquet", dir) { tmp =>
       val bytes = parquetBytes(frag)
       val target = 128L << 20
       val nFiles = math.max(1L, (bytes + target - 1) / target).toInt
@@ -289,7 +283,7 @@ object SourceQueries {
         .repartitionByRange(nFiles, col("doc_id"))
         .sortWithinPartitions("doc_id")
         .write.mode("overwrite").parquet(tmp.toString)
-    }.toString
+    }
   }
 
   /** Total bytes of a staged layout's parquet data files — fs metadata
@@ -343,9 +337,7 @@ object SourceQueries {
     * the added int `quality` column (n_chars % 7 — deterministic). */
   private[graft] def evolvedDocsPath(
       spark: SparkSession, dir: String): String = {
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_src_docs_evo_parquet", dir),
-        "_SUCCESS") { tmp =>
+    graft.Staging.stage("graft_src_docs_evo_parquet", dir) { tmp =>
       val docs = Tables(spark, dir).documents
       docs.filter(col("doc_id") % 2 === 0)
         .coalesce(1).write.mode("overwrite")
@@ -354,7 +346,7 @@ object SourceQueries {
         .withColumn("quality", (col("n_chars") % 7).cast("int"))
         .coalesce(1).write.mode("overwrite")
         .parquet(tmp.resolve("batch=2").toString)
-    }.toString
+    }
   }
 
   val all: Seq[QueryDef] =

@@ -943,15 +943,13 @@ object TextAnalysis {
     * registry entry), published atomically. `weights` = (tok, w) micro-
     * log-odds, `meta` = (prior_w, n_pos, n_neg, v). */
   private[graft] def nbModelPath(spark: SparkSession, dir: String): String =
-    graft.Staging.buildOnce(
-        graft.Staging.path("graft_nb_model", dir),
-        "_MODEL_READY") { tmp =>
+    graft.Staging.stage("graft_nb_model", dir) { tmp =>
       val (weights, meta) = nbTrain(nbLabeled(spark, dir))
       weights.coalesce(1).write.mode("overwrite")
         .parquet(tmp.resolve("weights").toString)
       meta.coalesce(1).write.mode("overwrite")
         .parquet(tmp.resolve("meta").toString)
-    }.toString
+    }
 
   /** Judged inference: the FROZEN staged model scores every document;
     * output = the fidelity census against the teacher rule — per

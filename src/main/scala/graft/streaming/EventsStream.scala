@@ -2,9 +2,9 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Structured-Streaming plumbing for the judged streaming queries.
   *
@@ -66,8 +66,8 @@ object EventsStream {
     // a relative sf dir would make links under /tmp resolve relative to
     // the staging dir and dangle — silently streaming zero rows
     val src = Paths.get(path).toAbsolutePath.normalize
-    val staged = graft.Staging.buildOnce(graft.Staging.path(
-        s"graft_${file.stripSuffix(".parquet")}_parts", path), "_STAGED") { tmp =>
+    val staged = graft.Staging.stage(
+        s"graft_${file.stripSuffix(".parquet")}_parts", path) { tmp =>
       val parts =
         if (!Files.isDirectory(src)) Seq(src)
         else {
@@ -80,7 +80,7 @@ object EventsStream {
         }
       parts.foreach(p => Files.createSymbolicLink(tmp.resolve(p.getFileName.toString), p))
     }
-    spark.readStream.schema(schema).parquet(staged.toString)
+    spark.readStream.schema(schema).parquet(staged)
   }
 
   /** Run a streaming DataFrame to completion into a memory sink, return
@@ -102,14 +102,7 @@ object EventsStream {
         "node, so its emission is O(input rows) — use runAggregated instead")
     val name = s"graft_stream_sink_${n.incrementAndGet()}"
     try {
-      graft.Graft.withConf(spark, backfillConf(spark, df): _*) {
-        val ckpt = ephemeralCheckpoint(name)
-        val q = df.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", ckpt.toString)
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        deleteNow(ckpt)
-      }
+      backfill(spark, df, mode, name)(_.format("memory").queryName(name))
       spark.table(name)
     } finally spark.catalog.dropTempView(name)
   }
@@ -204,45 +197,30 @@ object EventsStream {
       }.sum
   }
 
-  /** Checkpoint dir for a run-to-completion backfill query: RAM-backed
-    * (/dev/shm) when the OS provides it WITH headroom (≥1 GiB usable —
-    * containers often cap tmpfs at 64 MB, where state deltas would hit
-    * ENOSPC mid-query), tmpdir otherwise. The checkpoint of an
-    * AvailableNow backfill into an ephemeral sink is itself ephemeral —
-    * there is no restart to recover; a production deployment passes its
-    * own durable checkpointLocation and never enters this path, and keeps
-    * Spark's default checkpoint file manager. The run writes this dir
-    * through [[LocalCheckpointFiles]], which forks no `chmod` or
-    * `readlink` per file. Those forks, not fsync (Hadoop's local
-    * filesystem syncs nothing on close), were the per-file cost of a
-    * commit (SCALE.md, "Ephemeral checkpoint budget").
-    *
-    * Lifecycle contract: the CALLER deletes the dir via [[deleteNow]]
-    * immediately after `awaitTermination()` — RAM-backed checkpoints
-    * that linger until JVM exit compete with the page cache and executor
-    * memory for the rest of the session (a two-pass bench over 10
-    * streaming queries accumulated enough tmpfs pages to slow the warm
-    * pass's shuffle-heavy queries measurably). The exit hook registered
-    * here is only the backstop for a query that dies before cleanup. */
-  private def ephemeralCheckpoint(name: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths}
-    val shm = Paths.get("/dev/shm")
-    val shmUsable = Files.isWritable(shm) &&
-      (try Files.getFileStore(shm).getUsableSpace >= (1L << 30)
-       catch { case _: Throwable => false })
-    val base = if (shmUsable) shm else Paths.get(sys.props("java.io.tmpdir"))
-    val dir = Files.createTempDirectory(base, s"graft_ckpt_${name}_")
-    deleteOnExit(dir)
-    dir
-  }
-
-  /** Recursively delete a finished query's checkpoint dir right away and
-    * drop it from the exit-hook queue. Best-effort: a failure leaves the
-    * dir to the backstop hook. */
-  private def deleteNow(dir: java.nio.file.Path): Unit = {
-    graft.Staging.deleteRecursively(dir)
-    toDelete.remove(dir)
-  }
+  /** Run `df` to completion under `Trigger.AvailableNow` into the sink
+    * `sink` sets up, under its [[backfillConf]], with a checkpoint of its
+    * own. The checkpoint of an AvailableNow backfill into an ephemeral
+    * sink is itself ephemeral — there is no restart to recover; a
+    * production deployment passes its own durable checkpointLocation,
+    * never enters this path, and keeps Spark's default checkpoint file
+    * manager. So this one is a RAM-backed run directory when the host
+    * has room ([[graft.Staging.runDir]]), written through
+    * [[LocalCheckpointFiles]], which forks no `chmod` or `readlink` per
+    * file. Those forks, not fsync (Hadoop's local filesystem syncs
+    * nothing on close), were the per-file cost of a commit (SCALE.md,
+    * "Ephemeral checkpoint budget"). It is released as soon as the run
+    * ends: RAM-backed checkpoints that linger until JVM exit compete with
+    * the page cache and executor memory for the rest of the session (a
+    * two-pass bench over 10 streaming queries accumulated enough tmpfs
+    * pages to slow the warm pass's shuffle-heavy queries measurably). */
+  private def backfill(spark: SparkSession, df: DataFrame, mode: String,
+      name: String)(sink: DataStreamWriter[Row] => DataStreamWriter[Row]): Unit =
+    graft.Graft.withConf(spark, backfillConf(spark, df): _*) {
+      val ckpt = graft.Staging.runDir(s"graft_ckpt_${name}_", ram = true)
+      sink(df.writeStream).outputMode(mode).trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", ckpt.toString).start().awaitTermination()
+      graft.Staging.release(ckpt)
+    }
 
   /** Run a streaming DataFrame with the rollup INSIDE the stream's sink
     * path: `foreachBatch` partially aggregates every micro-batch with
@@ -259,49 +237,18 @@ object EventsStream {
     * empty batch (the file source makes every field nullable, as
     * inference does), not by inference: no footer-reading job per run,
     * and a stream that produces no batches yields an empty result of
-    * that schema. The staging directory is deleted on JVM exit (consumers
-    * read it lazily, so deletion can't happen any earlier than that). */
+    * that schema. The partials' run directory is deleted on JVM exit
+    * (consumers read it lazily, so deletion can't happen any earlier
+    * than that). */
   def runAggregated(spark: SparkSession, df: DataFrame, mode: String)(
       perBatch: DataFrame => DataFrame): DataFrame = {
     val id = n.incrementAndGet()
-    val out = java.nio.file.Files.createTempDirectory(s"graft_stream_agg_${id}_")
-    deleteOnExit(out)
+    val out = graft.Staging.runDir(s"graft_stream_agg_${id}_", ram = false).toString
     val schema = perBatch(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), df.schema)).schema
-    graft.Graft.withConf(spark, backfillConf(spark, df): _*) {
-      val ckpt = ephemeralCheckpoint(s"agg_$id")
-      val q = df.writeStream
-        .outputMode(mode)
-        .trigger(Trigger.AvailableNow())
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          perBatch(batch).write.mode("append").parquet(out.toString)
-        }
-        .start()
-      q.awaitTermination()
-      deleteNow(ckpt)
-    }
-    spark.read.schema(schema).parquet(out.toString)
-  }
-
-  /** Registered paths are recursively deleted by ONE static shutdown
-    * hook (not one hook thread per directory — a long-lived session
-    * registers an unbounded number of staging dirs). */
-  private val toDelete = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
-
-  private lazy val cleanupHook: Unit =
-    Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      var dir = toDelete.poll()
-      while (dir != null) {
-        graft.Staging.deleteRecursively(dir)
-        dir = toDelete.poll()
-      }
-    }))
-
-  /** Shared with the batch-side staging writers (bucketed-join layouts
-    * etc.) so the repo has exactly one exit-time cleanup path. */
-  private[graft] def deleteOnExit(dir: java.nio.file.Path): Unit = {
-    cleanupHook
-    toDelete.add(dir)
+      new java.util.ArrayList[Row](), df.schema)).schema
+    backfill(spark, df, mode, s"agg_$id")(_.foreachBatch {
+      (batch: DataFrame, _: Long) => perBatch(batch).write.mode("append").parquet(out)
+    })
+    spark.read.schema(schema).parquet(out)
   }
 }

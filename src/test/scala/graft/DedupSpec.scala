@@ -567,7 +567,7 @@ class DedupSpec extends SparkSpec {
     val filler = (1 to 300).map(i => s"f$i")
     val a = quoted.mkString(" ")
     val b = (quoted ++ filler).mkString(" ")
-    val dir = java.nio.file.Files.createTempDirectory("graft_cont").toString
+    val dir = tempDir("cont").toString
     Seq((0L, a, "en", "t", a.length.toLong),
         (1L, b, "en", "t", b.length.toLong))
       .toDF("doc_id", "text", "lang", "source", "n_chars")

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{DataFrame, SaveMode}
@@ -14,7 +12,7 @@ class ForeachBatchSpec extends SparkSpec {
   test("one stream feeds two sinks per micro-batch") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft_feb").toString
+    val tmp = tempDir("feb").toString
     val in = MemoryStream[(Long, String)]
     val q = in.toDF().toDF("k", "v").writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>

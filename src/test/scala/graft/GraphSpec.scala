@@ -180,7 +180,7 @@ class GraphSpec extends SparkSpec {
     // not rebuilt — a second execution leaves the staged marker's mtime
     // untouched, and the iteration plan scans the staged path
     val layout = java.nio.file.Paths.get(g.prBucketLayoutPath(spark, sf))
-    val marker = layout.resolve("_LAYOUT_READY")
+    val marker = layout.resolve(Staging.Published)
     val mtime0 = java.nio.file.Files.getLastModifiedTime(marker)
     val again = g.qGraphPagerankBucketed.run(spark, sf)
     again.collect()

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Output-layout management — the write-side half of the 100 TB story.
@@ -13,7 +11,7 @@ import org.apache.spark.sql.functions._
   * stands in for the real knob against small-file explosion at scale. */
 class LayoutSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_layout").toString
+  private lazy val tmp = tempDir("layout").toString
 
   test("partitionBy write + filtered read prunes to one partition dir") {
     val docs = Tables(spark, sf).documents

@@ -382,8 +382,7 @@ class SimilaritySpec extends SparkSpec {
     // reassignment shifts some vector's cluster or multiplicity
     val baseIdx = Similarity.ivfBaseIndexPath(spark, sf)
     val cents = spark.read.parquet(s"$baseIdx/centroids")
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_ingest_spec_").toString
+    val tmp = tempDir("ingest_spec").toString
     spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
       .filter(graft.queries.Scramble(col("vec_id")) % 4 === 0)

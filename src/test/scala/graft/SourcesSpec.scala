@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class SourcesSpec extends SparkSpec {
 
   private lazy val nation = Tables(spark, sf).nation
-  private lazy val tmp = Files.createTempDirectory("graft_sources").toString
+  private lazy val tmp = tempDir("sources").toString
 
   test("csv round-trip preserves rows (header + explicit schema)") {
     val p = s"$tmp/nation_csv"

@@ -22,18 +22,24 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   def sf: String = TestSpark.sf
 
+  /** A new directory for a test's files, named `graft_<tag>_…` in the
+    * temp dir. The engine's exit hook deletes it, since every suite runs
+    * in one forked JVM. */
+  protected def tempDir(tag: String): java.nio.file.Path =
+    Staging.runDir(s"graft_${tag}_", ram = false)
+
   /** `rows` as the single parquet file `file`, replacing any file there. */
   protected def writeParquetFile(rows: org.apache.spark.sql.DataFrame,
       file: java.nio.file.Path): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
-    val tmp = Files.createTempDirectory("graft_pq_")
+    val tmp = tempDir("pq")
     rows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val ls = Files.list(tmp)
     val one = try ls.filter(_.getFileName.toString.endsWith(".parquet"))
       .findFirst().get() finally ls.close()
     Files.createDirectories(file.getParent)
     Files.move(one, file, StandardCopyOption.REPLACE_EXISTING)
-    graft.Staging.deleteRecursively(tmp)
+    Staging.release(tmp)
   }
 
   /** Spark jobs started while `body` ran, counted by a listener. */

@@ -196,7 +196,7 @@ class StreamingSpec extends SparkSpec {
     // per micro-batch — the real file-source analog of the MemoryStream
     // tests, exercising the struct-max last-snapshot fold the judged
     // stateful queries rely on for multi-batch inputs
-    val staged = java.nio.file.Files.createTempDirectory("graft_mb_test_")
+    val staged = tempDir("mb_test")
     val src = Tables(spark, sf).events
       .select(col("user_id"), col("value"), unix_micros(col("ts")).as("ts_us"))
     src.filter(col("user_id") % 2 === 0).coalesce(1)
@@ -630,7 +630,7 @@ class StreamingSpec extends SparkSpec {
     // which source files are committed, so a later run (new deployment,
     // nightly backfill increment) processes ONLY newly-arrived files —
     // no reprocessing, no duplicates in the sink
-    val root = Files.createTempDirectory("graft_resume")
+    val root = tempDir("resume")
     val src = Files.createDirectory(root.resolve("src"))
     val ckpt = root.resolve("ckpt").toString
     val out = root.resolve("out").toString

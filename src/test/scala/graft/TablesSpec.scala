@@ -4,17 +4,13 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.AnalysisException
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 
 /** The memoized parquet reader ([[Tables.parquet]]): one schema inference
   * per file version and read conf, the same schema and rows as a plain
   * read, and a fresh frame (fresh attribute ids) on every read. */
-class TablesSpec extends SparkSpec with BeforeAndAfterAll {
+class TablesSpec extends SparkSpec {
 
-  private lazy val tmp = Files.createTempDirectory("graft_tables")
-
-  override def afterAll(): Unit =
-    try Staging.deleteRecursively(tmp) finally super.afterAll()
+  private lazy val tmp = tempDir("tables")
 
   private def twoCols = spark.range(20).select(col("id"), (col("id") * 2).as("x"))
 
