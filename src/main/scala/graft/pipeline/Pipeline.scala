@@ -3,6 +3,9 @@ package graft.pipeline
 import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.storage.StorageLevel
 
 /** The pyPiper-shaped composition facade, Spark-first.
@@ -17,19 +20,24 @@ import org.apache.spark.storage.StorageLevel
   * `run()` just forces Spark actions, so the whole chain lands in one
   * Catalyst plan: filters still push to the scan, transforms fuse into
   * whole-stage codegen, and a 1000-executor cluster parallelizes it
-  * without the facade knowing. Fan-out is the one place state appears:
-  * the shared upstream is persisted once so k branches scan it once, the
-  * Spark analog of pyPiper feeding every successor each record.
+  * without the facade knowing. Fan-out is the one place state can appear:
+  * an upstream that computes something (a filter, a derived column, a
+  * join) is persisted once so k branches read it once, the Spark analog
+  * of pyPiper feeding every successor each record. An upstream that only
+  * reads files (a file-source relation, at most renamed or narrowed by
+  * projections) is handed to the branches as it is: a copy would hold
+  * every column of the table to save no work, while an unpersisted read
+  * lets each branch scan only the columns it uses, and the branches
+  * still run in one plan when their leaves are combined.
   *
   * Cache lifecycle: every DataFrame a fan-out persists is recorded in the
   * execution's [[Node.Ctx]], and `Pipeline.run()` / `runWith()` unpersist
-  * them after the branches materialize — a long-lived session never
-  * accumulates pinned upstreams (the round-2 leak: each fan-out pinned
-  * its upstream in storage memory forever; at 100 TB the cache silently
-  * degrades to recompute-per-branch while evicting everyone else's
-  * blocks). For upstreams too large for executor memory, build the
-  * pipeline with `Pipeline.withStorage(StorageLevel.DISK_ONLY)` — same
-  * single-materialization semantics, spill-backed — or checkpoint the
+  * them after the branches materialize, so a long-lived session never
+  * accumulates pinned upstreams (each pinned upstream holds storage
+  * memory and, once that runs out, evicts other blocks). For upstreams
+  * too large for executor memory, build the pipeline with
+  * `Pipeline.withStorage(StorageLevel.DISK_ONLY)` (same
+  * single-materialization semantics, spill-backed) or checkpoint the
   * upstream before composing.
   */
 sealed trait Node {
@@ -81,14 +89,37 @@ object Node {
 
   final case class FanOut(branches: Seq[Node]) extends Node {
     def run(in: DataFrame, ctx: Ctx): Map[String, DataFrame] = {
-      // one materialization feeds k branches — the lazy-world equivalent
-      // of pyPiper pushing each record to every successor; recorded in
-      // ctx so the pipeline unpersists it after the branches run
-      val shared = in.persist(ctx.storage)
-      ctx.persisted += shared
-      branches.flatMap(_.run(shared, ctx)).toMap
+      // a computed upstream is materialized once for k branches (recorded
+      // in ctx, so the pipeline unpersists it after the branches run); a
+      // file read is passed through, since persisting it would copy the
+      // whole table and stop each branch's scan from pruning columns
+      val shared =
+        if (readsFilesOnly(in.queryExecution.analyzed)) in
+        else {
+          val cached = in.persist(ctx.storage)
+          ctx.persisted += cached
+          cached
+        }
+      val leaves = branches.flatMap(_.run(shared, ctx))
+      val paths = leaves.map(_._1)
+      val dups = paths.diff(paths.distinct).distinct
+      require(dups.isEmpty, "fan-out branches share the leaf path " +
+        dups.mkString("'", "', '", "'") + "; sibling leaves need distinct names")
+      leaves.toMap
     }
     def describe: String = branches.map(_.describe).mkString("[", ", ", "]")
+  }
+
+  /** True when `plan` only reads files: a file-source relation under
+    * projections that select or rename its columns and compute nothing. */
+  private def readsFilesOnly(plan: LogicalPlan): Boolean = plan match {
+    case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+    case Project(cols, child) =>
+      cols.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && readsFilesOnly(child)
+    case _ => false
   }
 
   // ---- constructors mirroring the reference's node vocabulary ----
@@ -127,9 +158,10 @@ object Node {
   * `pyPiper.Pipeline(graph).run()`: the only eager step. Termination/EOS
   * (op #11) is inherent: bounded inputs end.
   *
-  * @param storage persistence level for fan-out upstreams
+  * @param storage persistence level for computed fan-out upstreams
   *                (MEMORY_AND_DISK default; DISK_ONLY for upstreams
-  *                larger than executor memory). */
+  *                larger than executor memory). File reads are never
+  *                persisted. */
 final case class Pipeline(source: DataFrame, graph: Node,
     storage: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
 

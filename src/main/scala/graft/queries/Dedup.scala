@@ -1011,30 +1011,42 @@ object Dedup {
     * confirm) and never exchanged. */
   private[graft] def incrementalSurvivors(
       base: DataFrame, batch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
     val baseFp = base.select(fp.as("fp"))
-    // 1. distributed bloom build over base fingerprints — the one base
-    //    pass that at scale becomes an incrementally-maintained
-    //    artifact. Empty base → null sketch → FALSE probe → the filter
-    //    keeps nothing: zero candidates, every batch fp genuinely new.
-    val bfBytes = graft.functions.BloomProbe.sketch(baseFp, col("fp"))
-    val probe = graft.functions.BloomProbe.mightContain(bfBytes, col("fp"))
-    // 2. pre-shuffle candidate cut on the batch
+    // distributed bloom build over base fingerprints — the one base
+    // pass that at scale becomes an incrementally-maintained artifact.
+    // Empty base → null sketch → FALSE probe → zero candidates, every
+    // batch fp genuinely new.
+    admitNew(batch, graft.functions.BloomProbe.sketch(baseFp, col("fp")), baseFp)
+      .select(col("source"), col("doc_id"))
+  }
+
+  /** The admission chain both incremental paths share: the batch rows
+    * (doc_id, source, fp, …) whose text fingerprint `known` (a frame
+    * with an `fp` column) does not hold, deduplicated to min doc_id per
+    * fingerprint.
+    *   1. `sketch`, a bloom sketch of `known`'s fingerprints, cuts the
+    *      batch to candidates before any shuffle;
+    *   2. exact confirmation: `known` streams past the broadcast
+    *      candidates (no exchange on its side);
+    *   3. cross-batch anti against the broadcast confirmed set. Whole
+    *      fp-groups drop, so the in-batch min-per-fp over survivors
+    *      equals the min over the full batch (the oracle's formulation).
+    */
+  private def admitNew(batch: DataFrame, sketch: Array[Byte],
+      known: DataFrame): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
     val batchFp = batch.select(col("doc_id"), col("source"), fp.as("fp"))
+    val probe = graft.functions.BloomProbe.mightContain(sketch, col("fp"))
     val candidates = batchFp.filter(probe).select("fp").distinct()
-    // 3. exact confirmation: base streams past the broadcast candidates
-    val confirmed = baseFp
+    val confirmed = known
       .join(broadcast(candidates), Seq("fp"), "left_semi").distinct()
-    // 4. survivors: cross-batch anti (whole fp-groups drop, so the
-    //    in-batch min-per-fp over survivors equals the min over the
-    //    full batch — the oracle's formulation)
     batchFp
       .join(broadcast(confirmed), Seq("fp"), "left_anti")
       .withColumn("min_id",
         min(col("doc_id")).over(Window.partitionBy("fp")))
       .filter(col("doc_id") === col("min_id"))
-      .select(col("source"), col("doc_id"))
   }
 
   /** The shared base/batch workload split (deterministic, both engines
@@ -1160,18 +1172,7 @@ object Dedup {
     * genuinely new). */
   private[graft] def indexedAdmission(indexFp: DataFrame,
       sketchBytes: Array[Byte], batch: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fp = graft.functions.GraftFunctions.fingerprint(col("text"))
-    val batchFp = batch.select(col("doc_id"), col("source"), fp.as("fp"))
-    val probe = graft.functions.BloomProbe.mightContain(sketchBytes, col("fp"))
-    val candidates = batchFp.filter(probe).select("fp").distinct()
-    val confirmed = indexFp
-      .join(broadcast(candidates), Seq("fp"), "left_semi").distinct()
-    val surv = batchFp
-      .join(broadcast(confirmed), Seq("fp"), "left_anti")
-      .withColumn("min_id",
-        min(col("doc_id")).over(Window.partitionBy("fp")))
-      .filter(col("doc_id") === col("min_id"))
+    val surv = admitNew(batch, sketchBytes, indexFp)
     val scnt = surv.groupBy("source")
       .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).as("sum_kept_ids"))
     val bcnt = batch.groupBy("source").agg(count(lit(1)).as("n_batch"))

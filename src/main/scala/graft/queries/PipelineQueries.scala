@@ -33,9 +33,11 @@ object PipelineQueries {
     Pipeline(Tables(spark, dir).lineitem, graph).outputs("big_qty.revenue.agg")
   }
 
-  /** Fan-out: one cached scan of orders feeds two branches (status
-    * histogram, priority revenue), merged by UNION ALL — pyPiper's
-    * `a | [b, c]` with the merge half it lacks. */
+  /** Fan-out: the orders read feeds two branches (status histogram,
+    * priority histogram), merged by UNION ALL — pyPiper's `a | [b, c]`
+    * with the merge half it lacks. The upstream is a bare file read, so
+    * the facade does not persist it: each branch scans its one column
+    * and both run in the union's plan. */
   val qPipeFanout: QueryDef = QueryDef.oracle(
     "q_pipe_fanout",
     """SELECT * FROM (

@@ -889,22 +889,6 @@ object Similarity {
   private[graft] def jlProjected(emb: Column): Column =
     graft.functions.GraftFunctions.jlProject(emb)
 
-  /** The HOF statement of the projection — the definitional form the
-    * oracle renders; SimilaritySpec pins [[jlProjected]] ≡ this tower
-    * bit-for-bit (the graft_fingerprint native≡HOF discipline). Kept
-    * out of the judged plans: interpreted lambda dispatch carried most
-    * of q_embed_project's ~3900 CPU-s at 20 M vectors (r18 profile). */
-  private[graft] def jlProjectedHof(emb: Column): Column =
-    array((0 until 8).map { d =>
-      aggregate(
-        transform(emb, (x, j) =>
-          x.cast("double") *
-            (((j + lit(4096 + d * 64)).cast("long") * lit(1103515245L)
-              + lit(12345L)) % lit(2147483648L)).cast("double")
-              ./(lit(2.147483648e9)).-(lit(0.5))),
-        lit(0.0), (ac, v) => ac + v)
-    }: _*)
-
   /** One projected dimension as the oracle-side fold (DuckDB `i` is
     * 1-based; `i − 1` is the Spark lambda's 0-based j). `c` is the
     * vector column (default the corpus `embedding`; the IVF-composed
@@ -922,20 +906,6 @@ object Similarity {
     * one sqrt·sqrt division, 0 on zero denominator). */
   private[graft] def jlCos(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosineSim(a, b)
-
-  /** The HOF statement of the projected-space cosine (definitional
-    * oracle form; equal-length inputs only). SimilaritySpec pins
-    * [[jlCos]] ≡ this bit-for-bit: dot, ‖a‖², ‖b‖² are each 0.0-seeded
-    * ascending folds, and interleaving the three accumulators in one
-    * fused loop (graft_cosine) produces identical IEEE sums. */
-  private[graft] def jlCosHof(a: Column, b: Column): Column = {
-    def fold(terms: Column): Column =
-      aggregate(terms, lit(0.0), (ac, v) => ac + v)
-    val dot = fold(zip_with(a, b, (x, y) => x * y))
-    val na = fold(transform(a, x => x * x))
-    val nb = fold(transform(b, x => x * x))
-    coalesce(dot / nullif(sqrt(na) * sqrt(nb), lit(0.0)), lit(0.0))
-  }
 
   /** Random-projection compressed retrieval — the JL dimensionality
     * reduction a 100 TB vector store uses to cut candidate-scan

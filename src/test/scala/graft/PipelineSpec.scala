@@ -108,6 +108,95 @@ class PipelineSpec extends SparkSpec {
     assert(out == Map("s.pos" -> 99L, "s.neg" -> 0L))
   }
 
+  test("sibling branches that share a leaf name fail, naming the path") {
+    val g = Node.streams("s", "*") | Seq(
+      Node.select("a", col("x")), Node.select("a", col("x") + 1))
+    val e = intercept[IllegalArgumentException](Pipeline(range(3), g).run())
+    assert(e.getMessage.contains("'a'"), e.getMessage)
+  }
+
+  // --- Fan-out over a file read: passed through, never persisted --------
+
+  /** A 4-column parquet file: the branches below read one column each. */
+  private lazy val fanFile: String = {
+    val f = tempDir("fanout").resolve("t.parquet")
+    writeParquetFile(spark.range(300).select(col("id").as("x"),
+      (col("id") % 3).as("k3"), (col("id") % 5).as("k5"),
+      lit("padding").as("pad")), f)
+    f.toString
+  }
+
+  private val fanBranches = Seq(
+    Node.batchAll("by_k3")(_.groupBy("k3").agg(count(lit(1)).as("n"))),
+    Node.batchAll("by_k5")(_.groupBy("k5").agg(count(lit(1)).as("n"))))
+
+  /** Upstream shapes that only read the file: the bare relation, a
+    * column subset, and a renaming projection. */
+  private val fileUpstreams = Seq(
+    Node.streams("s", "*"),
+    Node.streams("s", "k3", "k5", "x"),
+    Node.transform("s")(_.select(col("k3"), col("k5"), col("pad").as("p"))))
+
+  test("a fan-out over a file read adds no cache entry and no persistent RDD") {
+    import org.apache.spark.storage.StorageLevel.NONE
+    for (up <- fileUpstreams) {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val src = spark.read.parquet(fanFile)
+      val ctx = Node.Ctx()
+      val outs = (up | fanBranches).run(src, ctx)
+      assert(ctx.persisted.isEmpty, s"${up.describe}: upstream persisted")
+      outs.values.foreach(_.collect())
+      // storageLevel looks the frame's plan up in the session's CacheManager
+      assert(src.storageLevel == NONE)
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- before).isEmpty,
+        s"${up.describe}: a persistent RDD appeared")
+    }
+  }
+
+  test("each branch over a file read scans only its own columns") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    for (up <- fileUpstreams) {
+      val outs = Pipeline(spark.read.parquet(fanFile), up | fanBranches).outputs
+      val readSchemas = outs.map { case (k, df) =>
+        k -> df.queryExecution.sparkPlan.collect {
+          case scan: FileSourceScanExec => scan.requiredSchema.fieldNames.toSeq
+        }
+      }
+      assert(readSchemas == Map("s.by_k3" -> Seq(Seq("k3")),
+        "s.by_k5" -> Seq(Seq("k5"))), up.describe)
+    }
+  }
+
+  test("fan-out leaves over a file read equal those over a computed upstream") {
+    def rows(outs: Map[String, org.apache.spark.sql.DataFrame]) =
+      outs.map { case (k, df) => k -> df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet }
+    val graph = Node.streams("s", "*") | fanBranches
+    val computed = spark.read.parquet(fanFile).withColumn("one", lit(1))
+    val ctx = Node.Ctx()
+    val viaCache = try {
+      val outs = graph.run(computed, ctx)
+      // the computed upstream still takes the persist path
+      assert(ctx.persisted.size == 1)
+      assert(computed.storageLevel == ctx.storage)
+      rows(outs)
+    } finally ctx.unpersistAll()
+    val viaFile = rows(Pipeline(spark.read.parquet(fanFile), graph).outputs)
+    assert(viaFile == viaCache)
+    assert(viaFile("s.by_k3") == Set((0L, 100L), (1L, 100L), (2L, 100L)))
+  }
+
+  test("q_pipe_fanout's warm execution runs at most 5 jobs") {
+    // one shuffle-map job per branch, the union's exchange, the sort's
+    // range sample and the result (5 at sf0.001, sf0.01 and sf0.1); a
+    // persisted upstream adds two jobs of its own (7)
+    val q = graft.queries.PipelineQueries.qPipeFanout
+    q.run(spark, sf).collect()
+    spark.catalog.clearCache()
+    val (_, jobs) = jobsDuring(q.run(spark, sf).collect())
+    spark.catalog.clearCache()
+    assert(jobs <= 5, s"q_pipe_fanout warm execution ran $jobs jobs")
+  }
+
   // --- The canonical pyPiper README walkthrough, ported literally -------
   // (SURVEY.md §2.A / §5.1): the first program a migrating user writes.
   //   Generate("gen", size=10) | Double("double") | Printer("print")

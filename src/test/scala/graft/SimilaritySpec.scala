@@ -452,6 +452,39 @@ class SimilaritySpec extends SparkSpec {
       s"planted twin not projected top-1: $top1")
   }
 
+  /** The HOF statement of the JL projection (the definitional form the
+    * q_embed_project oracle renders): output dim d is the ascending-j
+    * fold of v[j]·coef(d, j), coef from the LCG family at k = 4096 +
+    * d·64 + j. Kept out of the judged plans: interpreted lambda dispatch
+    * is what the native `graft_jl_project` replaced. */
+  private def jlProjectedHof(emb: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions._
+    array((0 until 8).map { d =>
+      aggregate(
+        transform(emb, (x, j) =>
+          x.cast("double") *
+            (((j + lit(4096 + d * 64)).cast("long") * lit(1103515245L)
+              + lit(12345L)) % lit(2147483648L)).cast("double")
+              ./(lit(2.147483648e9)).-(lit(0.5))),
+        lit(0.0), (ac, v) => ac + v)
+    }: _*)
+  }
+
+  /** The HOF statement of the projected-space cosine (equal-length
+    * inputs only): dot, ‖a‖², ‖b‖² are each 0.0-seeded ascending folds,
+    * and interleaving the three accumulators in one fused loop
+    * (graft_cosine) produces identical IEEE sums. */
+  private def jlCosHof(a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column) = {
+    import org.apache.spark.sql.functions._
+    def fold(terms: org.apache.spark.sql.Column) =
+      aggregate(terms, lit(0.0), (ac, v) => ac + v)
+    val dot = fold(zip_with(a, b, (x, y) => x * y))
+    val na = fold(transform(a, x => x * x))
+    val nb = fold(transform(b, x => x * x))
+    coalesce(dot / nullif(sqrt(na) * sqrt(nb), lit(0.0)), lit(0.0))
+  }
+
   test("native JL projection and double-cosine equal the HOF towers bit-for-bit") {
     // r18: graft_jl_project / graft_cosine(double) replaced the
     // interpreted aggregate(transform(...)) towers in the judged plans;
@@ -465,14 +498,14 @@ class SimilaritySpec extends SparkSpec {
       .select(col("vec_id"), col("embedding"))
     val both = n.select(col("vec_id"),
       Similarity.jlProjected(col("embedding")).as("nat"),
-      Similarity.jlProjectedHof(col("embedding")).as("hof"))
+      jlProjectedHof(col("embedding")).as("hof"))
     assert(both.filter(not(col("nat") <=> col("hof"))).count() == 0,
       "native JL projection drifts from the HOF tower")
     val q = both.filter(col("vec_id") < 4)
       .select(col("vec_id").as("q_id"), col("nat").as("pq"))
     val cmp = both.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .select(Similarity.jlCos(col("pq"), col("nat")).as("cn"),
-        Similarity.jlCosHof(col("pq"), col("hof")).as("ch"))
+        jlCosHof(col("pq"), col("hof")).as("ch"))
     assert(cmp.filter(not(col("cn") <=> col("ch"))).count() == 0,
       "native projected cosine drifts from the HOF fold")
   }
